@@ -1,7 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.clean.Cleaning
 import graft.dims.DateDim
@@ -31,20 +32,24 @@ object PipelineRunner {
       hwmBefore: Long, factHwmBefore: Long,
       extracted: Long, loaded: Long, qcPassed: Boolean)
 
-  private def tryRead(spark: SparkSession, path: String): Option[DataFrame] =
-    try { val df = spark.read.parquet(path); df.schema; Some(df) }
-    catch { case _: Exception => None }
+  /** `path` read with the schema its writer's plan produces (no
+    * schema-inference job), or None when the table does not exist yet.
+    * Only a missing path means "no table": an unreadable table throws, so
+    * a corrupt `loan_fact` can never read as an empty warehouse and
+    * re-key from fact_id 1. */
+  private def readIfExists(spark: SparkSession, path: String, schema: StructType): Option[DataFrame] =
+    try Some(spark.read.schema(schema).parquet(path))
+    catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => None }
 
-  /** Watermark lookup (S1/A1): max already-loaded source key + max fact id. */
-  def watermarks(spark: SparkSession, factPath: String): (Long, Long) =
-    tryRead(spark, factPath) match {
-      case Some(fact) =>
-        val r = fact.agg(
-          max(col("source_order_key")).cast("long").as("hwm"),
-          max(col("fact_id")).cast("long").as("fhwm")).first()
-        (if (r.isNullAt(0)) -1L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      case None => (-1L, 0L)
-    }
+  /** Fact projection (F21 replay-safe): `row_num` is a dense 1-based
+    * rank by source key, offset past the warehouse's max fact id. */
+  private def factRows(ranked: DataFrame, factHwm: Long): DataFrame = ranked.select(
+    (col("row_num") + lit(factHwm)).as("fact_id"),
+    col("o_orderkey").as("source_order_key"),
+    col("o_custkey").as("customer_id"),
+    date_format(col("order_date"), "yyyyMMdd").cast("int").as("date_id"),
+    col("amount"), col("priority_num"), col("status"),
+    year(col("order_date")).as("load_year"))
 
   /** Transform task (`spark_etl.py:149-156` chain): numeric fill, date
     * cast, abs, sentinel→NULL, priority parse, dedup, key filter. */
@@ -63,11 +68,19 @@ object PipelineRunner {
     * dims + fact, append fact / refresh dims, QC-gate the result. */
   def run(spark: SparkSession, sourceDir: String, warehouseDir: String): RunReport = {
     val factPath = s"$warehouseDir/loan_fact"
-    val (hwm, factHwm) = watermarks(spark, factPath)
+    val orders = Tables.orders(spark, sourceDir)
+    // every warehouse read takes its schema from the plan that writes the
+    // table (analysis only, no job); source key types vary by source
+    val factSchema = factRows(cleanOrders(orders).withColumn("row_num", lit(0L)), 0L).schema
+
+    // watermark (S1/A1): max already-loaded source key + max fact id
+    val (hwm, factHwm) = readIfExists(spark, factPath, factSchema).fold((-1L, 0L)) { fact =>
+      val r = fact.agg(max(col("source_order_key")).cast("long"), max(col("fact_id"))).first()
+      (if (r.isNullAt(0)) -1L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
 
     // extract (S2/P4): predicate on the real source column ⇒ pushdown
-    val increment = Tables.orders(spark, sourceDir)
-      .filter(col("o_orderkey") > lit(hwm))
+    val increment = orders.filter(col("o_orderkey") > lit(hwm))
     val cleaned = cleanOrders(increment).cache()
     val extracted = cleaned.count()
 
@@ -78,6 +91,7 @@ object PipelineRunner {
       col("c_name").as("customer_name"),
       col("c_mktsegment").as("segment"),
       col("c_acctbal").as("acct_balance"))
+    val dateDim = DateDim.fromColumn(cleaned, "order_date")
     // the customer-dim refresh shares nothing with the date-dim merge —
     // run it as a concurrent job so its write back-fills the other
     // job's scheduling gaps (guide §2.6 overlap-independent-jobs; the
@@ -94,8 +108,7 @@ object PipelineRunner {
     // rewriting the table past run()'s failure, its own failure swallowed)
     val datePath = s"$warehouseDir/date_dim"
     try {
-      val dateDim = DateDim.fromColumn(cleaned, "order_date")
-      val mergedDates = tryRead(spark, datePath) match {
+      val mergedDates = readIfExists(spark, datePath, dateDim.schema) match {
         case Some(existing) => existing.unionByName(dateDim).dropDuplicates("date_id")
         case None => dateDim
       }
@@ -131,34 +144,27 @@ object PipelineRunner {
     // fact (F21 replay-safe): dense surrogate keys offset past the HWM,
     // via the two-phase scale-safe global rank (ScalableRank) — a batch
     // of ANY size keys without an un-partitioned window.
-    val fact = graft.util.ScalableRank.globalRowNumber(cleaned, "o_orderkey").select(
-      (col("row_num") + lit(factHwm)).as("fact_id"),
-      col("o_orderkey").as("source_order_key"),
-      col("o_custkey").as("customer_id"),
-      date_format(col("order_date"), "yyyyMMdd").cast("int").as("date_id"),
-      col("amount"), col("priority_num"), col("status"),
-      year(col("order_date")).as("load_year"))
-    fact.write.mode(SaveMode.Append).partitionBy("load_year").parquet(factPath)
+    factRows(graft.util.ScalableRank.globalRowNumber(cleaned, "o_orderkey"), factHwm)
+      .write.mode(SaveMode.Append).partitionBy("load_year").parquet(factPath)
 
     // QC gate (`Airflow.py:66-73`): volumes, key nullability, key
-    // uniqueness and FK orphans — two jobs total (one aggregate pass,
-    // one combined orphan summary), not one job per metric
-    val loadedFact = spark.read.parquet(factPath)
-    val vitals = loadedFact.agg(
-      count(lit(1)).as("loaded"),
-      countDistinct(col("fact_id")).as("distinct_keys"),
-      sum(when(col("fact_id").isNull || col("customer_id").isNull, 1).otherwise(0))
-        .cast("long").as("null_keys")).first()
-    val (loaded, distinctKeys, nullKeys) =
-      (vitals.getLong(0), vitals.getLong(1), vitals.getLong(2))
-    val orphanRow = QualityChecks.orphanSummary(Seq(
-      ("cust_orphans", loadedFact,
-        spark.read.parquet(s"$warehouseDir/customer_dim"), "customer_id", "customer_id"),
-      ("date_orphans", loadedFact,
-        spark.read.parquet(datePath), "date_id", "date_id"))).first()
+    // uniqueness and both FK orphan counts in ONE aggregate over ONE
+    // fact scan (the dims join in as broadcast key sets)
+    def published(path: String, of: DataFrame) = spark.read.schema(of.schema).parquet(path)
+    val qc = QualityChecks.orphanSummaryOnePass(
+      spark.read.schema(factSchema).parquet(factPath),
+      Seq(("cust_orphans", published(s"$warehouseDir/customer_dim", customerDim),
+          "customer_id", "customer_id"),
+        ("date_orphans", published(datePath, dateDim), "date_id", "date_id")),
+      factMetrics = Seq(
+        count(lit(1)).as("loaded"),
+        countDistinct(col("fact_id")).as("distinct_keys"),
+        sum(when(col("fact_id").isNull || col("customer_id").isNull, 1).otherwise(0))
+          .cast("long").as("null_keys"))).first()
+    val Seq(loaded, distinctKeys, nullKeys, custOrphans, dateOrphans) =
+      (0 until 5).map(qc.getLong)
     cleaned.unpersist()
     RunReport(hwm, factHwm, extracted, loaded,
-      qcPassed = distinctKeys == loaded && nullKeys == 0 &&
-        orphanRow.getLong(0) == 0 && orphanRow.getLong(1) == 0)
+      qcPassed = distinctKeys == loaded && nullKeys == 0 && custOrphans == 0 && dateOrphans == 0)
   }
 }

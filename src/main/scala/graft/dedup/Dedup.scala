@@ -230,25 +230,6 @@ object Dedup {
       .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Small-corpus variant of [[minhashSignatures]]: hash each *distinct*
-    * shingle once and broadcast the dictionary. Cuts md5 work by the
-    * occurrence/vocabulary ratio, but ONLY safe when the vocabulary fits
-    * a broadcast (e.g. a bounded key domain) — never the default for
-    * open-vocabulary text. Same derived family as the main path. */
-  def minhashSignaturesDict(shingleTab: DataFrame): DataFrame = {
-    val dict = shingleTab.select("sh").distinct()
-      .select(col("sh"), md5(col("sh")).as("h"))
-      .select(col("sh"),
-        conv(substring(col("h"), 1, 10), 16, 10).cast("long").as("h1"),
-        conv(substring(col("h"), 11, 10), 16, 10).cast("long").as("h2"))
-      .select(col("sh") +: (0 until NumHashes).map(i =>
-        ((col("h1") + lit(i.toLong) * col("h2")) % MinhashP).as(s"h$i")): _*)
-    val aggs = (0 until NumHashes).map(i => min(col(s"h$i")).as(s"mh$i"))
-    shingleTab.repartition(col("doc_id"))
-      .join(broadcast(dict), Seq("sh"))
-      .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Unpivot a wide signature row to (doc_id, h_idx, mh) — the long form
     * the oracle computes directly; the wide form stays the efficient
     * single-pass representation in the engine. */
@@ -383,6 +364,8 @@ object Dedup {
         size(array_intersect(col("arr_a"), col("arr_b"))).cast("long").as("i"),
         size(col("arr_a")).cast("long").as("na"),
         size(col("arr_b")).cast("long").as("nb"))
+      // the join form only yields pairs that share a shingle
+      .filter(col("i") > 0)
       .select(col("doc_a"), col("doc_b"),
         (col("i").cast("double") / (col("na") + col("nb") - col("i"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)

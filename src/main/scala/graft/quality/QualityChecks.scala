@@ -37,13 +37,6 @@ object QualityChecks {
     df.agg(count(lit(1)).as("total_rows"), aggs: _*)
   }
 
-  /** Scale variant: HyperLogLog distincts for 100 TB profiling runs where
-    * exact uniqueness would shuffle every key (SURVEY §2.5 A3). */
-  def volumeMetricsApprox(df: DataFrame, keyCols: Seq[String], rsd: Double = 0.02): DataFrame = {
-    val aggs = keyCols.map(c => approx_count_distinct(col(c), rsd).as(s"approx_distinct_$c"))
-    df.agg(count(lit(1)).as("total_rows"), aggs: _*)
-  }
-
   /** Rows of `fact` whose `factKey` has no match in `dim` (left-anti). */
   def fkOrphans(fact: DataFrame, dim: DataFrame, factKey: String, dimKey: String): DataFrame =
     fact.join(dim, fact(factKey) === dim(dimKey), "left_anti")
@@ -67,10 +60,17 @@ object QualityChecks {
     * ONE aggregate. Anti-join null semantics are preserved: a NULL fk never
     * matches, so it counts as an orphan in both forms.
     *
+    * `factMetrics` are further aggregates over the fact's own columns
+    * that ride the same scan, ahead of the orphan counts in the result
+    * (the left joins keep exactly one row per fact row). This is the
+    * shape of `PipelineRunner`'s QC gate: loaded count, distinct fact
+    * ids, null keys and both FK orphan counts in one aggregate.
+    *
     * For a fact-sized "dim" (a fact-fact FK edge whose key set cannot
     * broadcast) keep that edge on the anti-join path ([[orphanSummary]]) —
     * Catalyst turns it into one SMJ instead of an unbounded broadcast. */
-  def orphanSummaryOnePass(fact: DataFrame, edges: Seq[(String, DataFrame, String, String)]): DataFrame = {
+  def orphanSummaryOnePass(fact: DataFrame, edges: Seq[(String, DataFrame, String, String)],
+                           factMetrics: Seq[Column] = Nil): DataFrame = {
     val joined = edges.foldLeft(fact) { case (acc, (name, dim, fk, _pk)) =>
       acc.join(broadcast(dim.select(col(_pk).as(s"__pk_$name")).distinct()),
         col(fk) === col(s"__pk_$name"), "left")
@@ -78,6 +78,7 @@ object QualityChecks {
     val aggs = edges.map { case (name, _, _, _) =>
       coalesce(sum(when(col(s"__pk_$name").isNull, 1).otherwise(0)), lit(0)).cast("long").as(name)
     }
-    joined.agg(aggs.head, aggs.tail: _*)
+    val all = factMetrics ++ aggs
+    joined.agg(all.head, all.tail: _*)
   }
 }

@@ -70,11 +70,6 @@ object Similarity {
       .groupBy(aCol, bCol)
       .agg(sum(col("qa") * col("qb")).as("dot"))
 
-  /** (vec_id, embedding, nsq): squared fixed-point norm. */
-  def withNorms(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("embedding"),
-      dotFixed(col("embedding"), col("embedding")).cast("double").as("nsq"))
-
   /** (vec_id, nsq) only — for joining norms onto pair sets. */
   def norms(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),

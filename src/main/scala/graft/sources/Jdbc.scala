@@ -41,14 +41,6 @@ object JdbcSource {
       .option("query", s"SELECT max($column) AS hwm FROM $table")
       .options(props)
       .load()
-
-  /** P4: incremental extract with the predicate on a *source* column so it
-    * reaches the database (`PushedFilters` in explain). */
-  def readIncremental(spark: SparkSession, url: String, table: String,
-                      watermarkCol: String, hwm: Long,
-                      props: Map[String, String] = Map.empty): DataFrame =
-    read(spark, url, table, props)
-      .filter(org.apache.spark.sql.functions.col(watermarkCol) > hwm)
 }
 
 /** Sink-side SQL generation for the CDC landing plane (K2/K3). Pure

@@ -18,10 +18,6 @@ object Sampling {
   def hashBucket(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 2), 16, 10).cast("int")
 
-  /** Keep ~`fraction` of rows, deterministically. */
-  def deterministicSample(df: DataFrame, idCol: String, fraction: Double): DataFrame =
-    df.filter(hashBucket(col(idCol)) < lit((fraction * 256).toInt))
-
   /** Per-stratum keep fractions (class rebalancing): strata not listed
     * keep everything. */
   def stratifiedSample(df: DataFrame, idCol: String, strataCol: String,

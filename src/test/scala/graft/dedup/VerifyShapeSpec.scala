@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.{SparkSpecBase, Tables}
+import org.apache.spark.sql.functions.{col, expr}
 
 /** Pin for the r16 verify restructure: [[Dedup.verifiedPairsArrays]]
   * (per-pair array_intersect over per-doc shingle arrays — the
@@ -35,5 +36,25 @@ class VerifyShapeSpec extends SparkSpecBase {
     val arrays = Dedup.verifiedPairsArrays(sh, cand, 0.1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(arrays === explode)
+  }
+
+  test("array-intersect verify matches at threshold 0 (no zero-overlap pairs)") {
+    // the join form only ever sees pairs that share a shingle; the array
+    // form must not add the disjoint candidates at jaccard 0
+    val docs = Tables.documents(spark, sfDir)
+    val sh = Dedup.docShingles(docs).cache()
+    val cand = Dedup.candidatePairs(Dedup.bandTable(Dedup.minhashSignatures(sh)))
+    // every doc paired with its successor: most such pairs share nothing
+    val ids = docs.select(col("doc_id"))
+    val disjoint = ids.as("a").join(ids.as("b"), expr("b.doc_id = a.doc_id + 1"))
+      .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
+    val all = cand.union(disjoint).distinct().cache()
+    val explode = Dedup.verifiedPairs(sh, all, 0.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val arrays = Dedup.verifiedPairsArrays(sh, all, 0.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(all.count() > explode.size, "the candidates should include disjoint pairs")
+    assert(arrays === explode)
+    assert(arrays.forall(_._3 > 0.0))
   }
 }

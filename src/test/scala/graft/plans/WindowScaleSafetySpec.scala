@@ -84,6 +84,47 @@ class WindowScaleSafetySpec extends SparkSpecBase {
     assert(gotRepart === want)
   }
 
+  /** (id, rank) pairs of `ScalableRank.globalRowNumber` and of the
+    * single-window reference over `(id, k)` rows, from ONE scan each. */
+  private def globalRanks(rows: Seq[(Long, Option[Long])]) = {
+    import spark.implicits._
+    val df = rows.toDF("id", "k").repartition(3)
+    val w = org.apache.spark.sql.expressions.Window.orderBy("k")
+    def pairs(ranked: DataFrame) =
+      ranked.select("id", "rn").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    (pairs(graft.util.ScalableRank.globalRowNumber(df, "k", "rn")),
+      pairs(df.withColumn("rn", row_number().over(w).cast("long"))))
+  }
+
+  test("globalRowNumber edge cases match the window: empty input, one distinct key, full-range long keys") {
+    val (emptyGot, emptyWant) = globalRanks(Nil)
+    assert(emptyGot.isEmpty && emptyWant.isEmpty)
+    // one key on every row: min = max; ties rank arbitrarily in both
+    // forms, so compare the rank values
+    val (oneGot, oneWant) = globalRanks((1L to 5L).map(i => (i, Some(42L))))
+    assert(oneGot.map(_._2) === oneWant.map(_._2))
+    assert(oneGot.map(_._1) === (1L to 5L).toSet)
+    // X242's case: a key spanning the whole long range overflows BIGINT
+    // in the interpolation unless it is widened to DECIMAL
+    val keys = Seq(Long.MinValue, -10000000000L, -1L, 0L, 7L, 10000000000L,
+      Long.MaxValue - 1, Long.MaxValue)
+    val (wideGot, wideWant) = globalRanks(keys.zipWithIndex.map { case (k, i) => (i.toLong, Some(k)) })
+    assert(wideGot === wideWant)
+  }
+
+  test("globalRowNumber keeps NULL order keys and ranks them first (window parity)") {
+    // every 4th row has a null key — a bucket equi-join would DROP them
+    val rows = (1L to 40L).map(i => (i, if (i % 4 == 0) None else Some(1000L - 7 * i)))
+    val (got, want) = globalRanks(rows)
+    assert(got.size === rows.size, "no row may vanish on a null key")
+    val nullIds = rows.collect { case (i, None) => i }.toSet
+    assert(got.filterNot(p => nullIds(p._1)) === want.filterNot(p => nullIds(p._1)))
+    assert(got.filter(p => nullIds(p._1)).map(_._2) === (1L to nullIds.size.toLong).toSet,
+      "null keys take the leading ranks, NULLS FIRST")
+    val (allNullGot, _) = globalRanks((1L to 3L).map(i => (i, None)))
+    assert(allNullGot.map(_._2) === Set(1L, 2L, 3L))
+  }
+
   test("ScalableRank.groupedRowNumber equals the grouped-window reference; partitions by (group, bucket)") {
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), expr("n_chars div 200").as("blk"),
