@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.text.TextFunctions
 import graft.dedup.Dedup
+import graft.util.ScanTuning
 
 /** End-to-end curation run for the documents plane — the training-data
   * analog of [[PipelineRunner]] (k6): compute every per-document
@@ -14,12 +15,17 @@ import graft.dedup.Dedup
   * the table a data-mix owner actually consumes: one row per document
   * with every signal that justified its keep/drop.
   *
-  * Scale notes: the signal plane is one tokenization pass per family
-  * (withTextSignals' shared-traversal discipline), the dedup plane is
-  * the banded LSH pipeline (no all-pairs anywhere), and the final join
-  * keys everything on doc_id — three shuffles total on the wide side.
-  * The parquet write partitions by language, which is what makes the
-  * downstream per-language budget/mix reads partition-pruned. */
+  * Plan split (one materialization point per run):
+  *   - plane: the documents are tokenized ONCE into one row per doc
+  *     carrying the text signals, the repetition ratio and the distinct
+  *     3-gram shingle set, materialized by one eager checkpoint;
+  *   - verify: MinHash signatures, LSH bands and band candidates read
+  *     the exploded shingle sets, and exact Jaccard intersects the
+  *     plane's own sets per candidate pair (no second shingle pass);
+  *   - components: min-label propagation over the verified pairs;
+  *   - write: plane ⋈ labels on doc_id, partitioned by language, which
+  *     is what makes the downstream per-language budget/mix reads
+  *     partition-pruned. */
 object CurationRunner {
 
   final case class Report(nDocs: Long, nRows: Long, nKept: Long, qcPassed: Boolean)
@@ -28,26 +34,38 @@ object CurationRunner {
   val QualityFloor = 0.5
   val TokenBand: (Int, Int) = (20, 200)
   val RepCap = 0.2
+  val NearDupThreshold = 0.5
 
-  /** The wide per-document curation table (not yet written): identity
-    * and quality signals, repetition ratio, near-dup component/keeper,
-    * and the composite keep verdict. */
-  def curate(spark: SparkSession, dir: String): DataFrame = {
+  /** One row per document: (doc_id, lang_detected, quality, n_tokens,
+    * rep_ratio, shs), where `shs` is the distinct 3-gram shingle set.
+    * One tokenization feeds every column; eager, because the signal
+    * columns, the signature build and the verify step all read it. */
+  private[graft] def plane(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val signals = TextFunctions.withTextSignals(docs)
-      .select("doc_id", "lang_detected", "quality", "n_tokens")
-    val sh = col("sh")
-    val total = size(sh)
-    val rep = docs
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"), TextFunctions.shingles(col("t"), 3).as("sh"))
-      .select(col("doc_id"),
-        round(when(total > 0,
-          (total - size(array_distinct(sh))).cast("double") / total.cast("double"))
-          .otherwise(0.0), 6).as("rep_ratio"))
-    val labels = Dedup.nearDupComponents(Dedup.minhashNearDups(docs, 0.5), docs)
+    TextFunctions.withTextSignals(ScanTuning.ensureParallelism(docs, col("doc_id")),
+        tokensCol = Some("__tok"))
+      .select(col("doc_id"), col("lang_detected"), col("quality"), col("n_tokens"),
+        TextFunctions.shingles(col("__tok"), 3).as("__sh"))
+      .select(col("doc_id"), col("lang_detected"), col("quality"), col("n_tokens"),
+        TextFunctions.repetitionRatioOfShingles(col("__sh")).as("rep_ratio"),
+        array_distinct(col("__sh")).as("shs"))
+      .localCheckpoint(true)
+  }
+
+  /** Verified near-dup pairs (doc_a, doc_b, jaccard) over a built
+    * [[plane]]: the MinHash/LSH candidates of its exploded shingle sets,
+    * checked by exact Jaccard on the sets themselves. */
+  private[graft] def nearDupPairs(plane: DataFrame): DataFrame = {
+    val sh = plane.select(col("doc_id"), explode(col("shs")).as("sh"))
+    val cand = Dedup.candidatePairs(Dedup.bandTable(Dedup.minhashSignatures(sh)))
+    Dedup.verifySets(plane.select(col("doc_id"), col("shs").as("arr")), cand, NearDupThreshold)
+  }
+
+  /** The curation table over a built [[plane]]. */
+  private def curateFrom(plane: DataFrame): DataFrame = {
+    val labels = Dedup.nearDupComponents(nearDupPairs(plane), plane.select("doc_id"))
       .select(col("doc_id"), col("component"), col("is_keeper"))
-    signals.join(rep, Seq("doc_id")).join(labels, Seq("doc_id"))
+    plane.drop("shs").join(labels, Seq("doc_id"))
       .withColumn("keep",
         (col("lang_detected").isin(AllowedLangs: _*) &&
           col("quality") >= QualityFloor &&
@@ -56,15 +74,23 @@ object CurationRunner {
           col("is_keeper") === 1).cast("int"))
   }
 
+  /** The wide per-document curation table (not yet written): identity
+    * and quality signals, repetition ratio, near-dup component/keeper,
+    * and the composite keep verdict. */
+  def curate(spark: SparkSession, dir: String): DataFrame =
+    curateFrom(plane(spark, dir))
+
   /** Write the curation table under `out/curation` (partitioned by
     * detected language), read it back, and QC-gate: row count must
     * equal the corpus, doc_ids must stay unique, and the keep verdict
     * must neither drop everything nor keep everything. */
   def run(spark: SparkSession, dir: String, out: String): Report = {
-    curate(spark, dir).write.mode("overwrite")
+    val docPlane = plane(spark, dir)
+    val table = curateFrom(docPlane)
+    table.write.mode("overwrite")
       .partitionBy("lang_detected").parquet(s"$out/curation")
-    val back = spark.read.parquet(s"$out/curation")
-    val nDocs = Tables.documents(spark, dir).count()
+    val back = spark.read.schema(table.schema).parquet(s"$out/curation")
+    val nDocs = docPlane.count()
     val row = back.agg(
       count(lit(1)).as("n"),
       countDistinct(col("doc_id")).as("nd"),

@@ -353,8 +353,15 @@ object Dedup {
     * but the (doc_a, doc_b) order is the distinct's own partitioning
     * and the planner would elide the repartition as redundant. */
   private[dedup] def verifiedPairsArrays(sh: DataFrame, cand: DataFrame,
-                                         threshold: Double): DataFrame = {
-    val arrs = sh.groupBy("doc_id").agg(collect_list(col("sh")).as("arr"))
+                                         threshold: Double): DataFrame =
+    verifySets(sh.groupBy("doc_id").agg(collect_list(col("sh")).as("arr")), cand, threshold)
+
+  /** The array-intersect body of [[verifiedPairsArrays]], over per-doc
+    * shingle SETS `(doc_id, arr)` (each array duplicate-free): callers
+    * that already hold the sets — CurationRunner's plane keeps them per
+    * document — skip the collect_list aggregate. */
+  private[graft] def verifySets(arrs: DataFrame, cand: DataFrame,
+                                threshold: Double): DataFrame = {
     val candWide = cand.repartition(
       cand.sparkSession.sparkContext.defaultParallelism, col("doc_b"), col("doc_a"))
     candWide
@@ -592,12 +599,15 @@ object Dedup {
     * standard large-graph CC loop, run to fixpoint). Deterministic for
     * any graph given fixed `iters`. */
   def nearDupComponents(pairs: DataFrame, docs: DataFrame, iters: Int = 2): DataFrame = {
-    // the symmetrizing union reads `pairs` twice — cache it, or the
-    // whole upstream near-dup pipeline evaluates once per branch
-    val p = pairs.cache()
+    // the symmetrizing union reads `pairs` twice — materialize it, or
+    // the whole upstream near-dup pipeline evaluates once per branch.
+    // An eager checkpoint, not cache(): its blocks belong to an RDD the
+    // ContextCleaner drops once the result is unreachable, while a
+    // CacheManager entry (and the planes its plan pins) lives until
+    // someone calls unpersist — a per-call leak in a long-lived session
+    val p = pairs.localCheckpoint(true)
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache()
     var labels = docs.select(col("doc_id"), col("doc_id").as("component"))
     for (_ <- 1 to iters) {
       val neigh = edges
@@ -606,13 +616,13 @@ object Dedup {
       // each hop references the previous labels TWICE (neighbour build +
       // left join), so the lineage doubles per hop — 2^iters plan
       // copies, the classic iterative-algorithm failure mode once the
-      // loop runs deep (fixpoint at scale). Cache per hop on deep loops;
-      // at the shallow default (2 hops = 4 copies) recomputation is
-      // cheaper than materialization.
+      // loop runs deep (fixpoint at scale). Checkpoint per hop on deep
+      // loops; at the shallow default (2 hops = 4 copies) recomputation
+      // is cheaper than materialization.
       labels = labels.join(neigh, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("component"), coalesce(col("nc"), col("component"))).as("component"))
-      if (iters > 2) labels = labels.cache()
+      if (iters > 2) labels = labels.localCheckpoint(true)
     }
     labels.withColumn("is_keeper", (col("doc_id") === col("component")).cast("int"))
   }

@@ -1339,7 +1339,9 @@ object TrainingData {
     // metadata.
     "x180_cluster_cohesion" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      clusterCohesion(Dedup.minhashNearDups(docs, 0.5).cache(), docs)
+      // eager, not cache(): both cohesion aggregates read the pairs,
+      // and a cached plan would outlive the query in the session
+      clusterCohesion(Dedup.minhashNearDups(docs, 0.5).localCheckpoint(true), docs)
     }),
 
     // X181 promoted to a gate row: large-star/small-star CC (Kiveris

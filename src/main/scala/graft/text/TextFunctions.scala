@@ -88,11 +88,14 @@ object TextFunctions {
     * multi-referenced, so CollapseProject keeps them un-inlined — each
     * stage runs once per row instead of once per `when`-arm (the same
     * lesson as `Dedup.docShingles`; without it the x19 curation filter
-    * was a 10× per-row CPU regression). Pass None to skip an output. */
+    * was a 10× per-row CPU regression). Pass None to skip an output;
+    * `tokensCol` keeps the token array under that name for callers that
+    * derive more per-row signals from it. */
   def withTextSignals(df: DataFrame, textCol: String = "text",
                       langCol: Option[String] = Some("lang_detected"),
                       qualityCol: Option[String] = Some("quality"),
-                      nTokensCol: Option[String] = Some("n_tokens")): DataFrame = {
+                      nTokensCol: Option[String] = Some("n_tokens"),
+                      tokensCol: Option[String] = None): DataFrame = {
     val T = "__graft_tok"
     val H = "__graft_hits"
     val hitName = LangMarkers.map { case (lang, _) => lang -> s"__graft_h_$lang" }.toMap
@@ -130,6 +133,7 @@ object TextFunctions {
         round(lit(0.4) * lenScore + lit(0.4) * (lit(1.0) - punctRatio) + lit(0.2) * stopRatio, 6))
     }
     nTokensCol.foreach(c => out = out.withColumn(c, size(tok)))
+    tokensCol.foreach(c => out = out.withColumn(c, tok))
     out.drop(T +: H +: AllHits +: LangMarkers.map(m => hitName(m._1)): _*)
   }
 
@@ -179,8 +183,13 @@ object TextFunctions {
     * `tokens(text)` expression (the shingle transform would re-run the
     * regex split once per shingle per row; the x25 query materializes
     * tokens and shingles as columns first). */
-  def repetitionRatio(tok: Column, n: Int = 3): Column = {
-    val sh = shingles(tok, n)
+  def repetitionRatio(tok: Column, n: Int = 3): Column =
+    repetitionRatioOfShingles(shingles(tok, n))
+
+  /** [[repetitionRatio]] over an already-built positional shingle array
+    * (pass a NAMED column, duplicates kept): for callers that keep the
+    * shingles for other uses, so they are built once. */
+  def repetitionRatioOfShingles(sh: Column): Column = {
     val total = size(sh)
     round(when(total > 0,
       (total - size(array_distinct(sh))).cast("double") / total.cast("double"))

@@ -15,4 +15,11 @@ trait SparkSpecBase extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Plans registered in the session's CacheManager. `numCachedEntries`
+    * is package-private to Spark's Scala code but public in bytecode. */
+  def cachedEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
 }

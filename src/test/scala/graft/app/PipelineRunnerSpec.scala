@@ -2,12 +2,9 @@ package graft.app
 
 import graft.SparkSpecBase
 import graft.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.io.File
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 class PipelineRunnerSpec extends SparkSpecBase {
 
@@ -112,37 +109,11 @@ class PipelineRunnerSpec extends SparkSpecBase {
   test("a small daily increment stays within its Spark job budget") {
     val wh = Files.createTempDirectory("graft_wh_budget").toString
     PipelineRunner.run(spark, sourcePrefix(0.98), wh)
-    // count the jobs between two marker jobs: the listener bus delivers
-    // events in order, so the end marker's start proves every job of the
-    // run has been counted
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val done = new CountDownLatch(1)
-    var counting = false // touched only on the listener bus thread
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
-          case "job-budget:start" => counting = true
-          case "job-budget:end" => counting = false; done.countDown()
-          case _ => if (counting) jobs.incrementAndGet()
-        }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    val r = try {
-      marker("job-budget:start")
-      val r = PipelineRunner.run(spark, sfDir, wh)
-      marker("job-budget:end")
-      assert(done.await(60, TimeUnit.SECONDS), "end marker never reached the listener")
-      r
-    } finally sc.removeSparkListener(listener)
+    val (r, jobs) = JobBudget.jobsDuring(spark)(PipelineRunner.run(spark, sfDir, wh))
     assert(r.extracted > 0 && r.qcPassed)
     // measured: 25 jobs with schema-carrying warehouse reads, rank
     // offsets summed on the driver and QC in one pass; 38 before them
     // (schema-inference jobs, a join-built rank, three QC fact scans)
-    assert(jobs.get <= 25 + 2, s"a daily run took ${jobs.get} Spark jobs")
+    assert(jobs <= 25 + 2, s"a daily run took $jobs Spark jobs")
   }
 }

@@ -43,4 +43,19 @@ class DedupPlaneSpec extends SparkSpecBase {
     assert(spark.sharedState.cacheManager.isEmpty,
       "a released plane must not leak storage in a long-running service")
   }
+
+  test("components and the other pair-graph loops add no CacheManager entry") {
+    val docs = Tables.documents(spark, sfDir)
+    val before = cachedEntries
+    assert(Dedup.nearDupComponents(Dedup.minhashNearDups(docs), docs).collect().nonEmpty)
+    assert(cachedEntries === before,
+      "nearDupComponents must not leave its pair plane cached")
+    // the deep-loop form checkpoints per hop instead of caching
+    Dedup.nearDupComponents(Dedup.minhashNearDups(docs), docs, iters = 4).collect()
+    assert(cachedEntries === before)
+    // the loops that cache on purpose release what they cached
+    Dedup.kcorePeel(Dedup.minhashNearDups(docs)).collect()
+    Dedup.nearDupComponentsFixpoint(Dedup.minhashNearDups(docs), docs).collect()
+    assert(cachedEntries === before)
+  }
 }

@@ -57,4 +57,18 @@ class VerifyShapeSpec extends SparkSpecBase {
     assert(arrays === explode)
     assert(arrays.forall(_._3 > 0.0))
   }
+
+  test("verify over the curation plane's shingle sets equals explode verify exactly") {
+    val plane = graft.app.CurationRunner.plane(spark, sfDir)
+    val sh = Dedup.docShingles(Tables.documents(spark, sfDir)).cache()
+    val cand = Dedup.candidatePairs(Dedup.bandTable(Dedup.minhashSignatures(sh))).cache()
+    for (t <- Seq(0.1, 0.5)) {
+      val explode = Dedup.verifiedPairs(sh, cand, t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val sets = Dedup.verifySets(plane.select(col("doc_id"), col("shs").as("arr")), cand, t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(sets === explode)
+      assert(explode.nonEmpty)
+    }
+  }
 }
