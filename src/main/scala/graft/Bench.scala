@@ -264,6 +264,23 @@ object Bench {
         s"""{"round":$round,"at":$now}""")
     } catch { case _: Throwable => () }
 
+  /** The tier round: an env pin (`SPARK_GRAFT_BENCH_ROUND`), else a
+    * fresh marker (same-session scaling-probe parity: the low-core run
+    * must time the SAME rotation third as the main run it is compared
+    * against), else `derived`, which is then persisted as the marker.
+    * A reused marker is not rewritten: refreshing its timestamp would
+    * let a chain of runs each under [[RoundMarkerFreshMs]] apart pin the
+    * round forever, and the tail thirds would stop rotating. With
+    * tiering off the marker is neither read nor written. */
+  def tierRound(envRound: Option[Int], tierOff: Boolean, derived: => Int,
+                path: String = RoundMarkerPath,
+                now: Long = System.currentTimeMillis()): Int =
+    envRound.orElse(if (tierOff) None else readRoundMarker(path, now)).getOrElse {
+      val r = derived
+      if (!tierOff) writeRoundMarker(r, path, now)
+      r
+    }
+
   /** Anchor reader: `{"mins": {row: sec}}` via the Jackson shipped in
     * Spark's own jars. Missing/unreadable file → empty map, which makes
     * every row headline (tiering degrades to the full surface, never to
@@ -333,22 +350,15 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_TIER").contains("off")
     val anchorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", "BENCH_ANCHOR.json")
     val anchorMins = if (tierOff) Map.empty[String, Double] else readAnchor(anchorPath)
-    // round number: env pin, else 1 + the BENCH_r*.json already landed
-    // in cwd (the driver runs from the repo root) — deterministic and
+    // round number (see tierRound): env pin, else a fresh marker, else
+    // 1 + the BENCH_r*.json already landed in cwd — deterministic and
     // monotone, so each tail third re-measures every third round
     // toIntOption: a malformed env pin degrades to the file-count rule
     // (the anchor-path contract — degrade, never crash the 1200 s run)
-    val envRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND").flatMap(_.toIntOption)
-    val round = envRound
-      // same-session marker first (scaling-probe rotation parity — see
-      // readRoundMarker scaladoc): the low-core run must time the SAME
-      // rotation third as the main run it is compared against
-      .orElse(if (tierOff) None else readRoundMarker())
-      .getOrElse {
-        Option(new java.io.File(".").listFiles()).map(_.count(f =>
-          f.getName.matches("BENCH_r\\d+\\.json"))).getOrElse(0) + 1
-      }
-    if (envRound.isEmpty && !tierOff) writeRoundMarker(round)
+    val round = tierRound(
+      sys.env.get("SPARK_GRAFT_BENCH_ROUND").flatMap(_.toIntOption), tierOff,
+      Option(new java.io.File(".").listFiles()).map(_.count(f =>
+        f.getName.matches("BENCH_r\\d+\\.json"))).getOrElse(0) + 1)
     val (headline, rotated, skipped) =
       if (tierOff || anchorMins.isEmpty) (base, Seq.empty[String], Seq.empty[String])
       else tierSelect(base, anchorMins, round)
@@ -638,6 +648,9 @@ object Bench {
     }
     def timedRun(n: String): Double = {
       spark.catalog.clearCache()
+      // queries run one at a time, so a nonzero count here is residue
+      // of a dropped task-end event
+      tasksRunning.set(0)
       maxConcSinceReset.set(0)
       val s = System.nanoTime()
       execute(n)

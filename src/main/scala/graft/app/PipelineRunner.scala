@@ -107,7 +107,17 @@ object PipelineRunner {
     // concurrent customer-dim overwrite is still running (it would keep
     // rewriting the table past run()'s failure, its own failure swallowed)
     val datePath = s"$warehouseDir/date_dim"
+    val fs = new org.apache.hadoop.fs.Path(warehouseDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (dateP, oldP) = (new org.apache.hadoop.fs.Path(datePath),
+      new org.apache.hadoop.fs.Path(s"$warehouseDir/.date_dim_old"))
     try {
+      // a run that crashed between the rename-aside and the publish left
+      // `.date_dim_old` as the only copy of the merged history: restore it
+      // before merging, or this run would rebuild the dimension from the
+      // increment alone and then delete that copy
+      if (!fs.exists(dateP) && fs.exists(oldP) && !fs.rename(oldP, dateP))
+        throw new java.io.IOException(s"date_dim recovery rename failed: $oldP -> $dateP")
       val mergedDates = readIfExists(spark, datePath, dateDim.schema) match {
         case Some(existing) => existing.unionByName(dateDim).dropDuplicates("date_id")
         case None => dateDim
@@ -122,11 +132,7 @@ object PipelineRunner {
       // from, not a silently missing table.
       val staging = s"$warehouseDir/.date_dim_staging"
       mergedDates.write.mode(SaveMode.Overwrite).parquet(staging)
-      val fs = new org.apache.hadoop.fs.Path(warehouseDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (stagingP, dateP, oldP) = (new org.apache.hadoop.fs.Path(staging),
-        new org.apache.hadoop.fs.Path(datePath),
-        new org.apache.hadoop.fs.Path(s"$warehouseDir/.date_dim_old"))
+      val stagingP = new org.apache.hadoop.fs.Path(staging)
       fs.delete(oldP, true)
       if (fs.exists(dateP) && !fs.rename(dateP, oldP))
         throw new java.io.IOException(s"date_dim publish: rename-aside failed: $dateP -> $oldP")

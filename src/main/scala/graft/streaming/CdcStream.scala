@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 import graft.cdc.{JsonFlatten, NameNormalizer, PkExtractor}
 
 /** Structured-Streaming CDC plane — replaces the reference's single-threaded
@@ -196,28 +197,28 @@ object CdcStream {
     rows.select(col(pk), col("raw_data"), col("kafka_topic"),
       lit(reason).as("error"), current_timestamp().as("failed_at"))
 
-  /** Recovery path for a failed whole-batch merge (T7): bisect the rows
-    * so only the rows the sink actually rejects are quarantined — the
-    * reference's per-message count-and-continue semantics
-    * (`mongo_postgres_cdc.py:439-453`) at O(log batch) merge attempts
-    * for one poison row, instead of diverting the entire good batch.
-    * Rows reach the driver ONLY on this path, and the batch is bounded
-    * by maxOffsetsPerTrigger — the happy path stays fully distributed. */
+  /** Merge driver-side rows into `sink` as one local frame (a
+    * `LocalRelation`: trivial to plan, one job per merge). Without a
+    * dead-letter sink a failed merge propagates and stops the stream.
+    * With one, the rows are bisected so only the rows the sink actually
+    * rejects are quarantined — the reference's per-message
+    * count-and-continue semantics (`mongo_postgres_cdc.py:439-453`) at
+    * O(log batch) merge attempts for one poison row, instead of
+    * diverting the entire good batch. */
   private def mergeBisect(rows: Array[Row], schema: StructType,
-                          spark: SparkSession, sink: UpsertSink, dl: UpsertSink,
+                          spark: SparkSession, sink: UpsertSink, dl: Option[UpsertSink],
                           pk: String, counters: Option[Counters]): Unit = {
     if (rows.isEmpty) return
-    import scala.jdk.CollectionConverters._
     val df = spark.createDataFrame(rows.toSeq.asJava, schema)
     try {
       sink.merge(df, pk)
       counters.foreach(_.merged.add(rows.length))
     } catch {
-      case e: Exception if rows.length == 1 =>
+      case e: Exception if dl.isDefined && rows.length == 1 =>
         val reason = s"merge_failed: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(500)}"
-        dl.merge(quarantineFrame(df, pk, reason), pk)
+        dl.get.merge(quarantineFrame(df, pk, reason), pk)
         counters.foreach(_.quarantined.add(1))
-      case _: Exception =>
+      case _: Exception if dl.isDefined =>
         val (l, r) = rows.splitAt(rows.length / 2)
         mergeBisect(l, schema, spark, sink, dl, pk, counters)
         mergeBisect(r, schema, spark, sink, dl, pk, counters)
@@ -227,55 +228,50 @@ object CdcStream {
   /** Wire the full stream: dedup within watermark, then merge per batch.
     * `AvailableNow` drains a backlog and stops (catch-up mode, T1).
     *
+    * Each micro-batch is evaluated exactly once: the transform plus the
+    * last-write-wins window is collected to the driver in one query,
+    * routed and counted there, and each sink merges a local frame of
+    * its rows. The driver therefore holds one deduped micro-batch at a
+    * time, so the source must bound it: `maxOffsetsPerTrigger`
+    * ([[kafkaSource]]) or `maxFilesPerTrigger` for file sources.
+    *
     * T7 dead-letter (`mongo_postgres_cdc.py:439-453` intent): with a
     * `deadLetter` sink, rows whose payload failed to parse are routed to
     * quarantine (pk + raw payload + reason) instead of landing as
-    * all-null rows, and a merge failure quarantines the failed batch and
-    * lets the stream continue — one poison message no longer fails the
-    * micro-batch, matching the reference's count-and-continue loop.
-    * Without a `deadLetter` sink, behavior is strict: merge errors
-    * propagate and stop the stream. */
+    * all-null rows, and a merge failure quarantines only the rows the
+    * sink rejects and lets the stream continue — one poison message no
+    * longer fails the micro-batch, matching the reference's
+    * count-and-continue loop. Without a `deadLetter` sink, behavior is
+    * strict: merge errors propagate and stop the stream. */
   def run(source: DataFrame, payloadSchema: DataType, topic: String,
           sink: UpsertSink, checkpointDir: String,
           availableNow: Boolean = false,
           deadLetter: Option[UpsertSink] = None,
           counters: Option[Counters] = None): DataStreamWriter[Row] = {
     val shaped = transform(source, payloadSchema, topic)
+    val internal = Set(ParseErrorCol, SrcPartitionCol, SrcOffsetCol)
     val writer = shaped.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // last-write-wins inside the batch, then idempotent merge (D2/T2).
-        // The batch persists across the quarantine-count / merge /
-        // merged-count actions — without it each action re-runs the
-        // dedup window AND the upstream transform (3× the batch cost).
+        // last-write-wins inside the batch, then idempotent merge (D2/T2)
         val pk = "kafka_primary_key"
-        val deduped = dedupLastWrite(batch, pk).persist()
-        try {
-          val hasMarker = deduped.columns.contains(ParseErrorCol)
-          val good = (if (hasMarker && deadLetter.isDefined)
-              deduped.filter(!col(ParseErrorCol)) else deduped)
-            .drop(ParseErrorCol, SrcPartitionCol, SrcOffsetCol)
-          deadLetter.foreach { dl =>
-            if (hasMarker) {
-              val bad = deduped.filter(col(ParseErrorCol))
-              val n = bad.count()
-              if (n > 0) {
-                dl.merge(quarantineFrame(bad, pk, "parse_error"), pk)
-                counters.foreach(_.quarantined.add(n))
-              }
-            }
-          }
-          try {
-            sink.merge(good, pk)
-            counters.foreach(_.merged.add(good.count()))
-          } catch {
-            case _: Exception if deadLetter.isDefined =>
-              // whole-batch merge failed: isolate the poison rows so
-              // every healthy row still lands (see mergeBisect)
-              mergeBisect(good.collect(), good.schema, good.sparkSession,
-                sink, deadLetter.get, pk, counters)
-          }
-        } finally deduped.unpersist()
+        val spark = batch.sparkSession
+        val deduped = dedupLastWrite(batch, pk)
+        val schema = deduped.schema
+        val rows = deduped.collect()
+        val marker = schema.fieldNames.indexOf(ParseErrorCol)
+        val (bad, kept) =
+          if (marker >= 0 && deadLetter.isDefined) rows.partition(_.getBoolean(marker))
+          else (Array.empty[Row], rows)
+        if (bad.nonEmpty) {
+          val quarantined = spark.createDataFrame(bad.toSeq.asJava, schema)
+          deadLetter.get.merge(quarantineFrame(quarantined, pk, "parse_error"), pk)
+          counters.foreach(_.quarantined.add(bad.length))
+        }
+        val keep = schema.fields.indices.filterNot(i => internal(schema(i).name))
+        val good = kept.map(r => Row.fromSeq(keep.map(r.get)))
+        mergeBisect(good, StructType(keep.map(schema(_))), spark,
+          sink, deadLetter, pk, counters)
       }
     if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer
   }

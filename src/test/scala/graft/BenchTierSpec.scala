@@ -150,6 +150,27 @@ class BenchTierSpec extends AnyFunSuite {
     java.nio.file.Files.delete(f)
   }
 
+  test("a reused round marker is not rewritten, so chained runs still rotate") {
+    val f = java.nio.file.Files.createTempFile("tier_round", ".json")
+    java.nio.file.Files.delete(f)
+    val t0 = 1700000000000L
+    val hour = 3600L * 1000
+    var derived = 5
+    def run(at: Long): Int = Bench.tierRound(None, tierOff = false, derived, f.toString, at)
+    assert(run(t0) === 5)           // no marker: derived and persisted
+    derived = 6
+    assert(run(t0 + 2 * hour) === 5) // fresh marker reused, left as written at t0
+    // 4 h after the marker was WRITTEN it is stale, although the last run
+    // was only 2 h ago: the round re-derives instead of staying pinned
+    assert(run(t0 + 4 * hour) === 6)
+    // an env pin wins and leaves the marker alone; tiering off neither
+    // reads nor writes it
+    assert(Bench.tierRound(Some(9), tierOff = false, 0, f.toString, t0 + 4 * hour) === 9)
+    assert(Bench.tierRound(None, tierOff = true, 7, f.toString, t0 + 4 * hour) === 7)
+    assert(Bench.readRoundMarker(f.toString, t0 + 4 * hour) === Some(6))
+    java.nio.file.Files.delete(f)
+  }
+
   test("a missing or malformed round marker degrades to None, never throws") {
     assert(Bench.readRoundMarker("/nonexistent/tier_round.json") === None)
     val f = java.nio.file.Files.createTempFile("tier_round", ".json")

@@ -106,6 +106,24 @@ class PipelineRunnerSpec extends SparkSpecBase {
     assert(next.qcPassed)
   }
 
+  test("a run after a crash between the date_dim rename-aside and its publish keeps the merged history") {
+    val src = sourcePrefix(0.5)
+    val wh = Files.createTempDirectory("graft_wh_dd_crash").toString
+    val clean = Files.createTempDirectory("graft_wh_dd_clean").toString
+    Seq(wh, clean).foreach(PipelineRunner.run(spark, src, _))
+    // the crash: date_dim was renamed aside, the staging copy never published
+    Files.move(Paths.get(wh, "date_dim"), Paths.get(wh, ".date_dim_old"))
+
+    val r = PipelineRunner.run(spark, sfDir, wh)
+    PipelineRunner.run(spark, sfDir, clean)
+    def dateIds(w: String) = spark.read.parquet(s"$w/date_dim")
+      .select("date_id").collect().map(_.getInt(0)).toSet
+    val (got, want) = (dateIds(wh), dateIds(clean))
+    assert(got == want, s"${(want -- got).size} of ${want.size} dates lost")
+    assert(r.qcPassed)
+    assert(!Files.exists(Paths.get(wh, ".date_dim_old")))
+  }
+
   test("a small daily increment stays within its Spark job budget") {
     val wh = Files.createTempDirectory("graft_wh_budget").toString
     PipelineRunner.run(spark, sourcePrefix(0.98), wh)

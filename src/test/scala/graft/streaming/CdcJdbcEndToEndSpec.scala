@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpecBase
-import graft.app.CdcRunner
+import graft.app.{CdcRunner, JobBudget}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
@@ -120,6 +120,62 @@ class CdcJdbcEndToEndSpec extends SparkSpecBase {
       assert(query("SELECT count(*) FROM dlq_events")(r => { r.next(); r.getLong(1) }) === 3L)
       assert(counters.merged.value === 3L)
       assert(counters.quarantined.value === 2L)
+    } finally q.stop()
+  }
+
+  test("one micro-batch runs within its Spark job budget and caches nothing") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      for (ddl <- Seq(
+        """CREATE TABLE budget_events (
+             raw_data VARCHAR(1024), id BIGINT, name VARCHAR(16), amount DOUBLE,
+             kafka_primary_key VARCHAR(64) PRIMARY KEY, kafka_topic VARCHAR(128),
+             processed_at TIMESTAMP)""",
+        """CREATE TABLE budget_events_quarantine (
+             kafka_primary_key VARCHAR(64) PRIMARY KEY, raw_data VARCHAR(1024),
+             kafka_topic VARCHAR(128), error VARCHAR(600), failed_at TIMESTAMP)"""))
+        try conn.createStatement().execute(ddl)
+        catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => }
+    } finally conn.close()
+
+    // the CacheManager as each merge sees it, i.e. while its batch runs
+    val duringMerge = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    class Probe(inner: CdcStream.UpsertSink) extends CdcStream.UpsertSink {
+      override def merge(batch: org.apache.spark.sql.DataFrame, pkCol: String): Unit = {
+        duringMerge.add(cachedEntries)
+        inner.merge(batch, pkCol)
+      }
+    }
+    val input = MemoryStream[String]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_budget").toString
+    val counters = CdcStream.newCounters(spark)
+    val q = CdcStream.run(
+      input.toDF().withColumnRenamed("value", "json"),
+      payloadSchema, "budget.events",
+      new Probe(new CdcRunner.JdbcUpsertSink(url, "budget_events")), ckpt,
+      deadLetter = Some(new Probe(new CdcRunner.JdbcUpsertSink(url, "budget_events_quarantine"))),
+      counters = Some(counters)).start()
+    try {
+      val before = cachedEntries
+      input.addData("""{"id": 1, "name": "warm", "amount": 1.0}""")
+      q.processAllAvailable()
+      val (_, jobs) = JobBudget.jobsDuring(spark) {
+        input.addData("""{"id": 2, "name": "ok", "amount": 2.0}""", """not json at all {{{""")
+        q.processAllAvailable()
+      }
+      input.addData("""{"id": 1, "name": "again", "amount": 3.0}""", """{{{ still not json""")
+      q.processAllAvailable()
+      // measured: 4 jobs, the one collect of the deduped batch (2 under
+      // AQE) and one per merge; 8 when the batch was persisted and
+      // re-read by two count jobs
+      assert(jobs <= 4, s"a micro-batch with one good and one malformed row took $jobs Spark jobs")
+      assert(duringMerge.size === 5)
+      assert(duringMerge.toArray.forall(_ == before),
+        s"a batch cached its rows: CacheManager entries during merges $duringMerge, before $before")
+      assert(cachedEntries === before)
+      assert(counters.merged.value === 3L && counters.quarantined.value === 2L)
     } finally q.stop()
   }
 }

@@ -100,9 +100,9 @@ class CdcStreamSpec extends SparkSpecBase {
   test("micro-batch transform evaluates once per batch, not once per action") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // identity UDF on the payload column counts row evaluations: with the
-    // batch persisted, the quarantine-count / merge / merged-count actions
-    // share ONE evaluation of the transform (it was 3× before)
+    // identity UDF on the payload column counts row evaluations: the
+    // deduped batch is collected once, and routing, counting and both
+    // merges work from those rows, so the transform runs ONCE per row
     val evals = spark.sparkContext.longAccumulator("json_evals")
     val track = udf((s: String) => { evals.add(1); s })
     val input = MemoryStream[String]
