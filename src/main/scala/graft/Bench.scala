@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, length, lit, sum, when}
+import graft.util.Json
 
 /** Driver-run benchmark. Emits one JSON line PER RUN as it completes
   * (stderr + `bench_progress.jsonl`), then one summary line per query,
@@ -298,26 +299,9 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", " ").replace("\r", " ").replace("\t", " ") + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the generated-class cache defaults to 100 entries; a full-surface
-      // run compiles several hundred distinct WholeStageCodegen units, so
-      // at the default every query re-compiles (and re-JITs) its codegen
-      // on every timed run — measured 3-4× inflation on short multi-stage
-      // queries (x10: 4.3 s full-surface vs 1.2 s isolated). Any service
-      // running a wide query mix should raise it the same way.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val budget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble).getOrElse(1200.0)
@@ -580,7 +564,6 @@ object Bench {
             .write.mode("overwrite").parquet(idxDir + "/k9_snapshot")
           val k9Hwm = Relational.k9StageDeltas(spark, sfDir, idxDir)
           m += "k9_incremental_join" -> ((s: SparkSession, _: String) => {
-            s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
             Relational.incrementalJoinFold(
               s.read.parquet(idxDir + "/k9_snapshot"),
               lOld = s.table(graft.sources.BucketedLayout.liTable)
@@ -681,11 +664,11 @@ object Bench {
         // round-over-round signal lives)
         st.planned = pinnedRuns.getOrElse(
           if (!luxury(n)) 2 else if (st.warm < 1.0) 5 else 3)
-        emit(s"""{"query":${jstr(n)},"pass":0,"sec":${st.warm},"warmup":true}""")
+        emit(s"""{"query":${Json.str(n)},"pass":0,"sec":${st.warm},"warmup":true}""")
       } catch {
         case e: Throwable =>
           st.err = Some(fmtErr(e))
-          emit(s"""{"query":${jstr(n)},"pass":0,"sec":null,"err":${jstr(st.err.get)}}""")
+          emit(s"""{"query":${Json.str(n)},"pass":0,"sec":null,"err":${Json.str(st.err.get)}}""")
       }
       st
     }
@@ -720,7 +703,7 @@ object Bench {
           val s = timedRun(st.name)
           trackConc(st)
           st.samples += s
-          emit(s"""{"query":${jstr(st.name)},"pass":$pass,"sec":$s}""")
+          emit(s"""{"query":${Json.str(st.name)},"pass":$pass,"sec":$s}""")
           // warm-divergence retry: a pass-1/2 sample >3× the warmup of
           // the SAME plan is contention, not the query (warm already
           // paid codegen on top) — grab one immediate extra sample
@@ -734,14 +717,14 @@ object Bench {
             val r = timedRun(st.name)
             trackConc(st)
             st.samples += r
-            emit(s"""{"query":${jstr(st.name)},"pass":$pass,"sec":$r,""" +
+            emit(s"""{"query":${Json.str(st.name)},"pass":$pass,"sec":$r,""" +
               """"retry":true}""")
           }
         } catch {
           case e: Throwable =>
             st.err = Some(fmtErr(e))
-            emit(s"""{"query":${jstr(st.name)},"pass":$pass,"sec":null,""" +
-              s""""err":${jstr(st.err.get)}}""")
+            emit(s"""{"query":${Json.str(st.name)},"pass":$pass,"sec":null,""" +
+              s""""err":${Json.str(st.err.get)}}""")
         }
       }
     }
@@ -766,7 +749,7 @@ object Bench {
           val s = timedRun(st.name)
           trackConc(st)
           st.samples += s
-          emit(s"""{"query":${jstr(st.name)},"pass":${st.planned + 1},""" +
+          emit(s"""{"query":${Json.str(st.name)},"pass":${st.planned + 1},""" +
             s""""sec":$s,"stall_resample":true}""")
         } catch {
           case e: Throwable =>
@@ -774,8 +757,8 @@ object Bench {
             // a failure in the EXTRA diagnostic sample must not demote
             // it to a partial-error row (r14 ADVICE); record the
             // failure as its own flag line and leave the state alone
-            emit(s"""{"query":${jstr(st.name)},"pass":${st.planned + 1},""" +
-              s""""sec":null,"stall_resample_err":${jstr(fmtErr(e))}}""")
+            emit(s"""{"query":${Json.str(st.name)},"pass":${st.planned + 1},""" +
+              s""""sec":null,"stall_resample_err":${Json.str(fmtErr(e))}}""")
         }
       }
     }
@@ -800,13 +783,13 @@ object Bench {
       }
       res match {
         case Ok(med, mn, runs, planned, warm, deg, stall, wmin, partial) =>
-          emit(s"""{"query":${jstr(st.name)},"sec":$med,"min":$mn,"runs":$runs,""" +
+          emit(s"""{"query":${Json.str(st.name)},"sec":$med,"min":$mn,"runs":$runs,""" +
             s""""planned":$planned,"warm":$warm,"degraded":$deg,""" +
             s""""stall_suspect":$stall,"warm_min":$wmin,""" +
             s""""max_conc":${st.maxConc},"err":null,""" +
-            s""""partial_err":${partial.map(jstr).getOrElse("null")}}""")
+            s""""partial_err":${partial.map(Json.str).getOrElse("null")}}""")
         case Err(e) =>
-          emit(s"""{"query":${jstr(st.name)},"sec":null,"err":${jstr(e)}}""")
+          emit(s"""{"query":${Json.str(st.name)},"sec":null,"err":${Json.str(e)}}""")
       }
       st.name -> res
     }
@@ -817,14 +800,14 @@ object Bench {
     val clean = ok.filterNot(_._2.degraded)
     val degraded = ok.filter(_._2.degraded)
     val stalls = clean.filter(_._2.stall)
-    val qs = ok.map { case (k, o) => jstr(k) + ":" + o.med }.mkString("{", ",", "}")
-    val mins = clean.map { case (k, o) => jstr(k) + ":" + o.min }.mkString("{", ",", "}")
-    val errJson = errs.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val qs = ok.map { case (k, o) => Json.str(k) + ":" + o.med }.mkString("{", ",", "}")
+    val mins = clean.map { case (k, o) => Json.str(k) + ":" + o.min }.mkString("{", ",", "}")
+    val errJson = errs.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString("{", ",", "}")
-    val degJson = degraded.map(p => jstr(p._1)).mkString("[", ",", "]")
-    val stallJson = stalls.map(p => jstr(p._1)).mkString("[", ",", "]")
+    val degJson = degraded.map(p => Json.str(p._1)).mkString("[", ",", "]")
+    val stallJson = stalls.map(p => Json.str(p._1)).mkString("[", ",", "]")
     val warmMins = clean.filter(_._2.warmMin)
-    val warmMinJson = warmMins.map(p => jstr(p._1)).mkString("[", ",", "]")
+    val warmMinJson = warmMins.map(p => Json.str(p._1)).mkString("[", ",", "]")
     val minRuns = if (ok.isEmpty) 0 else ok.map(_._2.runs).min
     val totalClean = clean.map(_._2.med).sum
     val totalDegraded = degraded.map(_._2.med).sum
@@ -834,7 +817,7 @@ object Bench {
         s"flagged stall_suspect (median/min > 3×): ${stalls.map(_._1).mkString(", ")}")
     val partials = ok.collect { case (n, o) if o.partialErr.isDefined =>
       n -> o.partialErr.get }
-    val partialJson = partials.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val partialJson = partials.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString("{", ",", "}")
     if (partials.nonEmpty) System.err.println(
       s"[bench] ${partials.size} quer${if (partials.size == 1) "y" else "ies"} " +
@@ -853,7 +836,7 @@ object Bench {
     // (BenchTierSpec pins the ≤45%-of-tail balance on the committed
     // anchor)
     val rotatedAnchorMin = rotated.flatMap(anchorMins.get).sum
-    val skippedJson = skipped.map(jstr).mkString("[", ",", "]")
+    val skippedJson = skipped.map(Json.str).mkString("[", ",", "]")
     // `value` is the CLEAN total only: warmup-fallback rows (planning +
     // codegen compile time) must not poison round-over-round comparison.
     // Under TIERING `value`/`queries`/`mins` cover the TIMED subset of
@@ -866,7 +849,7 @@ object Bench {
     // flat low-core ratios split into "parallel but overhead-bound" vs
     // "serial plan" by this column)
     val concJson = states.filter(_.err.isEmpty)
-      .map(st => jstr(st.name) + ":" + st.maxConc).mkString("{", ",", "}")
+      .map(st => Json.str(st.name) + ":" + st.maxConc).mkString("{", ",", "}")
     val aggregate =
       s"""{"metric":"total","value":$totalClean,"unit":"sec","queries":$qs,""" +
       s""""mins":$mins,"task_conc":$concJson,"skipped_rows":$skippedJson,""" +
@@ -880,7 +863,7 @@ object Bench {
       s""""anchor_skipped_min":$anchorSkippedMin,""" +
       s""""rotated_anchor_min":$rotatedAnchorMin,""" +
       s""""total_min_full_est":${totalMin + anchorSkippedMin},""" +
-      s""""wall":$elapsed,"sf":${jstr(sfDir)}}"""
+      s""""wall":$elapsed,"sf":${Json.str(sfDir)}}"""
     println(aggregate)
     // the stdout tail is all the driver keeps; the file is the
     // self-sufficient copy of the same line

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.Json
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -112,21 +112,9 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -134,19 +122,19 @@ object PlanDump {
           val df = fn(spark, sfDir)
           val (ops, scans) = signature(df.queryExecution.executedPlan)
           val opsJson = ops.toSeq.sorted
-            .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+            .map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
           val scansJson = scans.map(m =>
-            s"""{"format":${jstr(m("format").toString)},"pushed":${m("pushed")},""" +
+            s"""{"format":${Json.str(m("format").toString)},"pushed":${m("pushed")},""" +
             s""""partFilters":${m("partFilters")},"readCols":${m("readCols")}}""")
             .mkString("[", ",", "]")
           s"""{"ops":$opsJson,"scans":$scansJson}"""
         } catch {
           case e: Throwable =>
             System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-            s"""{"err":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
+            s"""{"err":${Json.str(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
         } finally spark.catalog.clearCache()
         System.err.println(s"[plandump] $name done")
-        s"${jstr(name)}: $body"
+        s"${Json.str(name)}: $body"
       }
     Files.writeString(Paths.get(outPath),
       entries.mkString("{\n", ",\n", "\n}\n"))

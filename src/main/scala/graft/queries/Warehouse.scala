@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.dims.LateDim
 import graft.operators.Hierarchy
 import graft.plans.{AggRewrite, DistinctElim, JoinElim}
@@ -293,47 +293,34 @@ object Warehouse {
     // InjectRuntimeFilter builds at run time and pushes into the fact
     // scan, so lineitem rows whose orderkey cannot join are dropped AT
     // THE SCAN instead of surviving to the shuffle. Broadcast is
-    // disabled in the conf scope deliberately: this is the 100 TB
+    // disabled on the query's own session clone deliberately: the 100 TB
     // shape, where NEITHER side broadcasts and the bloom is what keeps
     // the fact-side shuffle delta-sized. The require() makes the gate
     // honest (x133 discipline): if injection ever stops, the gate
     // FAILS rather than silently running the unpruned join. The oracle
     // is the plain join SQL — the hash gate proves the bloom loses no
     // rows (one-sided filter: false positives only).
-    "x140_runtime_filter" -> ((s, d) => {
-      val prev = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-        .map(k => k -> s.conf.getOption(k)).toMap
-      try {
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "512MB")
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        val urgent = Tables.orders(s, d)
-          .filter(col("o_orderpriority") === "1-URGENT")
-          .select("o_orderkey")
-        val joined = Tables.lineitem(s, d)
-          .join(urgent, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("l_returnflag")
-          .agg(Det.dsumExpr(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-                 .as("revenue"),
-               count(lit(1)).as("n_items"))
-          .orderBy("l_returnflag")
-        // force optimization INSIDE the conf scope (plans are lazy);
-        // the materialized queryExecution keeps the injected filter
-        val plan = joined.queryExecution.executedPlan.toString
-        require(plan.toLowerCase.contains("bloomfilter"),
-          s"runtime bloom filter was not injected into the fact scan:\n$plan")
-        joined
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+    "x140_runtime_filter" -> ((s0, d) => {
+      val s = Sessions.withConf(s0,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "512MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+      val urgent = Tables.orders(s, d)
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select("o_orderkey")
+      val joined = Tables.lineitem(s, d)
+        .join(urgent, col("l_orderkey") === col("o_orderkey"))
+        .groupBy("l_returnflag")
+        .agg(Det.dsumExpr(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+               .as("revenue"),
+             count(lit(1)).as("n_items"))
+        .orderBy("l_returnflag")
+      val plan = joined.queryExecution.executedPlan.toString
+      require(plan.toLowerCase.contains("bloomfilter"),
+        s"runtime bloom filter was not injected into the fact scan:\n$plan")
+      joined
     }),
 
     // X161: bitmap-index algebra — the warehouse bitmap index (O'Neil

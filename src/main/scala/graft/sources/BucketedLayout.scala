@@ -75,14 +75,12 @@ object BucketedLayout {
   /** The exchange-free, sort-free SMJ over the bucketed layout
     * (BucketedLayoutSpec pins the absence of both). Spark reports a
     * bucketed scan's per-file sort order only behind
-    * `legacy.bucketedTableScan.outputOrdering` (and only with one file
-    * per bucket, which [[materialize]] guarantees) — without it the SMJ
-    * re-sorts each already-sorted bucket and keeps only the exchange
-    * win. */
-  def bucketedJoinAgg(s: SparkSession): DataFrame = {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    * `legacy.bucketedTableScan.outputOrdering`, which
+    * [[graft.Sessions.local]] sets (and only with one file per bucket,
+    * which [[materialize]] guarantees) — without it the SMJ re-sorts
+    * each already-sorted bucket and keeps only the exchange win. */
+  def bucketedJoinAgg(s: SparkSession): DataFrame =
     joinAgg(s.table(liTable), s.table(ordTable))
-  }
 
   /** The identical join over the plain parquet layout: shuffles + sorts
     * both facts on the key — the cost the bucketed layout deletes. */

@@ -94,13 +94,16 @@ object CdcStream {
         Map("columnNameOfCorruptRecord" -> CorruptCol)))
       .select(keep :+ parseError.as(ParseErrorCol) :+ col("payload.*"): _*)
       .drop(CorruptCol)
-    val flat = JsonFlatten.flatten(parsed)
-    val normalized = NameNormalizer(flat)
-    PkExtractor.withPrimaryKey(normalized)
+    keyed(parsed, topic)
+  }
+
+  /** The tail both transforms share: flatten → normalize → key, then the
+    * raw payload under its output name and the metadata stamp. */
+  private def keyed(parsed: DataFrame, topic: String): DataFrame =
+    PkExtractor.withPrimaryKey(NameNormalizer(JsonFlatten.flatten(parsed)))
       .withColumnRenamed("__graft_raw", "raw_data")
       .withColumn("kafka_topic", lit(topic))
       .withColumn("processed_at", current_timestamp())
-  }
 
   /** F22/§7.1 (the reference's per-message inference, batch-granular):
     * infer the payload schema from the micro-batch's own JSON, flatten/
@@ -130,12 +133,7 @@ object CdcStream {
     val parsed = raw.withColumn("payload",
         from_json(col("json"), inferred.schema))
       .select(keep :+ col("payload.*"): _*)
-    val flat = JsonFlatten.flatten(parsed)
-    val normalized = NameNormalizer(flat)
-    PkExtractor.withPrimaryKey(normalized)
-      .withColumnRenamed("__graft_raw", "raw_data")
-      .withColumn("kafka_topic", lit(topic))
-      .withColumn("processed_at", current_timestamp())
+    keyed(parsed, topic)
   }
 
   /** Columns this batch carries that the sink table does not yet have —

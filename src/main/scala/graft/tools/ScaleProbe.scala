@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** One-off linearity probe for geometry-parameterized operators — times
@@ -18,13 +17,7 @@ object ScaleProbe {
     val dir = args(1)
     val param = args(2).toInt
     val runs = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     def build() = op match {
       case "semcontam" =>
         graft.sim.Similarity.semanticContam(graft.Tables.embeddings(spark, dir),

@@ -1,31 +1,31 @@
 package graft.streaming
 
+import graft.{Sessions, SparkSpecBase}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the transformWithState (state v2) face: named per-key state
   * variables on the RocksDB provider, running totals accumulating
   * across micro-batches, keys isolated, Update-mode emission per batch.
-  * Own suite (not SparkSpecBase) because the provider conf must be set
-  * before the streaming query plans its state store.
+  * The provider conf must be set before the streaming query plans its
+  * state store, so the streams run on a clone of the shared session
+  * that carries it: the other suites in the JVM keep the default
+  * provider.
   */
-class StatefulCountsSpec extends AnyFunSuite {
+class StatefulCountsSpec extends SparkSpecBase {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      StatefulCounts.RocksDbProvider)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private lazy val rocks: SparkSession =
+    Sessions.withConf(spark, providerKey -> StatefulCounts.RocksDbProvider)
+
+  test("the RocksDB provider stays on the clone") {
+    assert(rocks.conf.get(providerKey) === StatefulCounts.RocksDbProvider)
+    assert(!spark.conf.getOption(providerKey).contains(StatefulCounts.RocksDbProvider))
+  }
 
   test("running totals accumulate across micro-batches, per key") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
+    import rocks.implicits._
+    implicit val sq = rocks.sqlContext
     val input = MemoryStream[UserEvent]
     val q = StatefulCounts.runningTotals(input.toDS())
       .writeStream.format("memory").queryName("twstate")
@@ -36,7 +36,7 @@ class StatefulCountsSpec extends AnyFunSuite {
       input.addData(UserEvent(1, 5.0))
       q.processAllAvailable()
 
-      val rows = spark.table("twstate").as[UserRunning].collect()
+      val rows = rocks.table("twstate").as[UserRunning].collect()
       // batch 1 emissions: user 1 (n=2, 5.0), user 2 (n=1, 10.0)
       assert(rows.contains(UserRunning(1, 2, 5.0)))
       assert(rows.contains(UserRunning(2, 1, 10.0)))
@@ -48,8 +48,8 @@ class StatefulCountsSpec extends AnyFunSuite {
   }
 
   test("event-time timers close a session when the watermark passes the gap") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
+    import rocks.implicits._
+    implicit val sq = rocks.sqlContext
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[StampedEvent]
     // 10-minute gap, zero lateness allowance
@@ -64,14 +64,14 @@ class StatefulCountsSpec extends AnyFunSuite {
         StampedEvent(1, t("2024-01-01 00:05:00")))
       q.processAllAvailable()
       // nothing closed yet: watermark is still at the burst
-      assert(spark.table("twtimer").count() === 0)
+      assert(rocks.table("twtimer").count() === 0)
       // another key's event advances event time past 00:15 → watermark
       // passes user 1's timer; a follow-up batch delivers the expiry
       input.addData(StampedEvent(2, t("2024-01-01 01:00:00")))
       q.processAllAvailable()
       input.addData(StampedEvent(2, t("2024-01-01 01:00:01")))
       q.processAllAvailable()
-      val closed = spark.table("twtimer").as[SessionClose].collect()
+      val closed = rocks.table("twtimer").as[SessionClose].collect()
       assert(closed.exists(c => c.user_id == 1 && c.n_events == 2 &&
         c.closed_at_ms == t("2024-01-01 00:15:00").getTime),
         s"expected user 1's 2-event session closed at 00:15, got ${closed.mkString(",")}")
@@ -81,8 +81,8 @@ class StatefulCountsSpec extends AnyFunSuite {
   }
 
   test("an in-allowance out-of-order event in a later batch never pulls the timer earlier") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
+    import rocks.implicits._
+    implicit val sq = rocks.sqlContext
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     val input = MemoryStream[StampedEvent]
     // 10-minute gap, 30-minute lateness allowance: late events are
@@ -106,14 +106,14 @@ class StatefulCountsSpec extends AnyFunSuite {
       q.processAllAvailable()
       input.addData(StampedEvent(2, t("2024-01-01 00:51:00")))
       q.processAllAvailable()
-      assert(spark.table("twtimer_ooo").count() === 0,
+      assert(rocks.table("twtimer_ooo").count() === 0,
         "session must NOT close at straggler+gap while last-event+gap is ahead")
       // now pass the RIGHT close time: wm = 01:10 − 30 min = 00:40
       input.addData(StampedEvent(2, t("2024-01-01 01:10:00")))
       q.processAllAvailable()
       input.addData(StampedEvent(2, t("2024-01-01 01:11:00")))
       q.processAllAvailable()
-      val closed = spark.table("twtimer_ooo").as[SessionClose].collect()
+      val closed = rocks.table("twtimer_ooo").as[SessionClose].collect()
       assert(closed.exists(c => c.user_id == 1 && c.n_events == 3 &&
         c.closed_at_ms == t("2024-01-01 00:30:00").getTime),
         s"expected ONE 3-event session closed at 00:30, got ${closed.mkString(",")}")
