@@ -37,9 +37,9 @@ import org.apache.spark.sql.types.{DataType, DecimalType}
   * sum convention qualifies, which is also the only form that is
   * reproducible on a 1000-executor cluster in the first place.
   *
-  * Wire-up: per-plan via [[AggRewrite.apply]], or session-wide through
-  * `graft.plans.GraftExtensions` (injectOptimizerRule) with summaries
-  * registered in [[AggRewrite.register]].
+  * Wire-up: per-plan via [[AggRewrite.apply]], or inside the optimizer
+  * as the rule value [[AggRewrite.rule]], which carries its summaries
+  * and is installed on a `graft.Sessions.withRules` clone.
   */
 object AggRewrite {
 
@@ -85,18 +85,9 @@ object AggRewrite {
       maxs = maxCols.map(m => m -> s"max_$m").toMap,
       cnt = "cnt")
 
-  /** Session-wide registry for the GraftExtensions optimizer-rule path.
-    * Bounded: summaries are dimension-cardinality metadata, and the
-    * registry holds plan references, not data. */
-  private val registered = new java.util.concurrent.CopyOnWriteArrayList[Summary]()
-  def register(s: Summary): Unit = registered.add(s)
-  def clearRegistry(): Unit = registered.clear()
-
-  /** The optimizer rule over the session registry. */
-  object RegistryRule extends Rule[LogicalPlan] {
-    import scala.jdk.CollectionConverters._
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewrite(plan, registered.asScala.toSeq)
+  /** [[rewrite]] against `summaries` as an optimizer rule. */
+  def rule(summaries: Seq[Summary]): Rule[LogicalPlan] = new Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan, summaries)
   }
 
   /** Rewrite every eligible Aggregate in `plan` against `summaries`.
@@ -130,10 +121,9 @@ object AggRewrite {
     case _ => None
   }
 
-  /** Apply against `summaries` and return the rewritten DataFrame.
-    * The per-plan entry point for engines that build sessions without
-    * extensions (the gate path); same transform the injected optimizer
-    * rule runs session-wide. */
+  /** Apply against `summaries` and return the rewritten DataFrame: the
+    * per-plan entry point, the same transform [[rule]] runs inside the
+    * optimizer. */
   def apply(spark: SparkSession, df: DataFrame, summaries: Seq[Summary]): DataFrame = {
     val rewritten = rewrite(df.queryExecution.analyzed, summaries)
     org.apache.spark.sql.graft.PlanUtil.ofRows(spark, rewritten)

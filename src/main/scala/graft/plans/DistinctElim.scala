@@ -22,6 +22,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Filter, Logical
   * rows), Projects must retain the key columns. The child's attributes
   * pass through `Deduplicate` unchanged, so the parent plan keeps
   * resolving with no exprId surgery.
+  *
+  * The rewrite runs per plan only ([[DistinctElim.apply]], x146's
+  * gate): inside the optimizer it could never fire, because core
+  * Spark rewrites `Deduplicate` to an `Aggregate` before any user rule
+  * runs.
   */
 object DistinctElim {
 
@@ -30,17 +35,6 @@ object DistinctElim {
 
   def unique(df: DataFrame, cols: String*): UniqueKey =
     UniqueKey(df.queryExecution.analyzed, cols.toSet)
-
-  /** Session-wide registry for the GraftExtensions optimizer path. */
-  private val registered = new java.util.concurrent.CopyOnWriteArrayList[UniqueKey]()
-  def register(k: UniqueKey): Unit = registered.add(k)
-  def clearRegistry(): Unit = registered.clear()
-
-  object RegistryRule extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-    import scala.jdk.CollectionConverters._
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewrite(plan, registered.asScala.toSeq)
-  }
 
   /** Drop every no-op Deduplicate in `plan` under `keys`. */
   def rewrite(plan: LogicalPlan, keys: Seq[UniqueKey]): LogicalPlan =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** PK-FK join elimination — the second classic warehouse optimizer
   * rewrite beside the aggregate navigator ([[AggRewrite]], SURVEY
@@ -35,6 +36,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Log
   * from generated queries — the dim read, however small, still costs
   * a build + probe per batch on every executor, and fact⋈fact edges
   * mistaken for dims cost a full shuffle.
+  *
+  * Wire-up: per-plan via [[JoinElim.apply]], or inside the optimizer as
+  * the rule value [[JoinElim.rule]], which carries its constraints and
+  * is installed on a `graft.Sessions.withRules` clone.
   */
 object JoinElim {
 
@@ -48,17 +53,9 @@ object JoinElim {
   def constraint(dim: DataFrame, pk: String, referential: Boolean = true): KeyConstraint =
     KeyConstraint(dim.queryExecution.analyzed, pk, referential)
 
-  /** Session-wide registry for the GraftExtensions optimizer-rule
-    * path (plan references only — bounded metadata). */
-  private val registered = new java.util.concurrent.CopyOnWriteArrayList[KeyConstraint]()
-  def register(c: KeyConstraint): Unit = registered.add(c)
-  def clearRegistry(): Unit = registered.clear()
-
-  /** The optimizer rule over the session registry. */
-  object RegistryRule extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-    import scala.jdk.CollectionConverters._
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewrite(plan, registered.asScala.toSeq)
+  /** [[rewrite]] under `constraints` as an optimizer rule. */
+  def rule(constraints: Seq[KeyConstraint]): Rule[LogicalPlan] = new Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan, constraints)
   }
 
   /** Rewrite every eliminable fact⋈dim in `plan`. Matches both the

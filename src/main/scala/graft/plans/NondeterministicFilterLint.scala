@@ -45,18 +45,8 @@ object NondeterministicFilterLint {
   }
 }
 
-/** Session extension registrar: the O-3 lint as an analysis check, and
-  * the three warehouse rewrites — the aggregate navigator
-  * ([[AggRewrite.RegistryRule]]) over the session's registered rollups,
-  * PK-FK join elimination ([[JoinElim.RegistryRule]]) over the declared
-  * key constraints, and distinct elimination
-  * ([[DistinctElim.RegistryRule]]) over the declared unique keys — as
-  * optimizer rules. */
+/** Session extension registrar: the O-3 lint as an analysis check. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     e.injectCheckRule(_ => NondeterministicFilterLint.check)
-    e.injectOptimizerRule(_ => AggRewrite.RegistryRule)
-    e.injectOptimizerRule(_ => JoinElim.RegistryRule)
-    e.injectOptimizerRule(_ => DistinctElim.RegistryRule)
-  }
 }

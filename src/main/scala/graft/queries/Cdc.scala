@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.cdc.{JsonFlatten, NameNormalizer, PkExtractor}
 import graft.functions.SmartTimestamp.smart_timestamp
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, StreamTuning}
 
 /** CDC-plane operators (SURVEY §2.3 F13-F20, §2.7) exercised as batch
   * queries over the `events` table — the same transform functions are
@@ -162,17 +162,18 @@ object Cdc {
           .select(ev.columns.map(col): _*)))
       // state partitions sized from the staged volume (StreamTuning:
       // streams can't AQE-coalesce; at gate scale 32 near-empty state
-      // stores dominated every micro-batch — ~2 s per 0-row batch)
-      graft.streaming.StreamTuning.withInputSizedShufflePartitions(s, Seq(in)) {
-        val q = graft.streaming.EventAggregates.tumblingCounts(
-            s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in + "/*"), "1 day")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", scratch.toString + "/ckpt")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      // stores dominated every micro-batch — ~2 s per 0-row batch),
+      // set on a clone: other queries may be planning on `s` meanwhile
+      val ss = Sessions.withConf(s, "spark.sql.shuffle.partitions" ->
+        StreamTuning.inputSizedShufflePartitions(s, Seq(in)).toString)
+      graft.streaming.EventAggregates.tumblingCounts(
+          ss.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1).parquet(in + "/*"), "1 day")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", scratch.toString + "/ckpt")
+        .format("parquet").option("path", out)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       s.read.parquet(out)
         .filter(col("event_type") =!= "__sentinel")
         .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
@@ -224,16 +225,16 @@ object Cdc {
             lit(0.0).as("value"))
           .select(ev.columns.map(col): _*)))
       // input-sized state partitions (see x190 / StreamTuning)
-      graft.streaming.StreamTuning.withInputSizedShufflePartitions(s, Seq(in)) {
-        val q = graft.streaming.EventAggregates.sessionized(
-            s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in + "/*"), "1 hour")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", scratch.toString + "/ckpt")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ss = Sessions.withConf(s, "spark.sql.shuffle.partitions" ->
+        StreamTuning.inputSizedShufflePartitions(s, Seq(in)).toString)
+      graft.streaming.EventAggregates.sessionized(
+          ss.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1).parquet(in + "/*"), "1 hour")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", scratch.toString + "/ckpt")
+        .format("parquet").option("path", out)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       s.read.parquet(out)
         .filter(col("user_id").isNull || col("user_id") =!= -1L)
         .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
@@ -299,23 +300,23 @@ object Cdc {
       stageStreamBatches(s, scratch.toString + "/clk", Seq(
         clk.filter(col("click_ts") < lit(mid)),
         clk.filter(col("click_ts") >= lit(mid))))
-      val impS = s.readStream.schema(imp.schema)
-        .option("maxFilesPerTrigger", 1).parquet(scratch.toString + "/imp/*")
-      val clkS = s.readStream.schema(clk.schema)
-        .option("maxFilesPerTrigger", 1).parquet(scratch.toString + "/clk/*")
       // input-sized state partitions (see x190 / StreamTuning) — the
       // stream-stream join keeps TWO state stores per partition, so the
       // per-partition fixed cost is heaviest on this row
-      graft.streaming.StreamTuning.withInputSizedShufflePartitions(s,
-          Seq(scratch.toString + "/imp", scratch.toString + "/clk")) {
-        val q = graft.streaming.StreamJoin.attributedClicks(impS, clkS, "1 hour")
-          .select("imp_id", "click_id", "imp_user")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", scratch.toString + "/ckpt")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ss = Sessions.withConf(s, "spark.sql.shuffle.partitions" ->
+        StreamTuning.inputSizedShufflePartitions(s,
+          Seq(scratch.toString + "/imp", scratch.toString + "/clk")).toString)
+      val impS = ss.readStream.schema(imp.schema)
+        .option("maxFilesPerTrigger", 1).parquet(scratch.toString + "/imp/*")
+      val clkS = ss.readStream.schema(clk.schema)
+        .option("maxFilesPerTrigger", 1).parquet(scratch.toString + "/clk/*")
+      graft.streaming.StreamJoin.attributedClicks(impS, clkS, "1 hour")
+        .select("imp_id", "click_id", "imp_user")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", scratch.toString + "/ckpt")
+        .format("parquet").option("path", out)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       s.read.parquet(out).orderBy("imp_id", "click_id")
     }),
 
@@ -365,19 +366,19 @@ object Cdc {
       // ssjMid above.
       val maxId = strm.agg(max("doc_id")).collect()(0).getLong(0)
       val delaySec = maxId + 1000000L + 3600L
-      val sread = s.readStream.schema(strm.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in + "/*")
       // input-sized state partitions (see x190 / StreamTuning)
-      graft.streaming.StreamTuning.withInputSizedShufflePartitions(s, Seq(in)) {
-        val q = graft.streaming.StreamDedup
-          .dedupOnIngest(sread, hist, "text", "ts", s"$delaySec seconds")
-          .select("fp")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", scratch.toString + "/ckpt")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ss = Sessions.withConf(s, "spark.sql.shuffle.partitions" ->
+        StreamTuning.inputSizedShufflePartitions(s, Seq(in)).toString)
+      val sread = ss.readStream.schema(strm.schema)
+        .option("maxFilesPerTrigger", 1).parquet(in + "/*")
+      graft.streaming.StreamDedup
+        .dedupOnIngest(sread, hist, "text", "ts", s"$delaySec seconds")
+        .select("fp")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", scratch.toString + "/ckpt")
+        .format("parquet").option("path", out)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       s.read.parquet(out).orderBy("fp")
     }),
 
@@ -430,18 +431,18 @@ object Cdc {
             lit(0.0).as("value"))
           .select(ev.columns.map(col): _*)))
       // input-sized state partitions (see x190 / StreamTuning)
-      graft.streaming.StreamTuning.withInputSizedShufflePartitions(s, Seq(in)) {
-        val q = graft.streaming.EventAggregates.closedSessions(
-            s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in + "/*"),
-            gapMs = 3600000L, watermark = "2 hours")
-          .toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", scratch.toString + "/ckpt")
-          .format("parquet").option("path", out)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ss = Sessions.withConf(s, "spark.sql.shuffle.partitions" ->
+        StreamTuning.inputSizedShufflePartitions(s, Seq(in)).toString)
+      graft.streaming.EventAggregates.closedSessions(
+          ss.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1).parquet(in + "/*"),
+          gapMs = 3600000L, watermark = "2 hours")
+        .toDF()
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", scratch.toString + "/ckpt")
+        .format("parquet").option("path", out)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       s.read.parquet(out)
         .filter(col("user_id").isNull || col("user_id") =!= -1L)
         .withColumn("session_start", col("session_start").cast("timestamp_ntz"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.util.Det._
 import graft.clean.Cleaning
 import graft.dims.DateDim
@@ -32,10 +32,12 @@ object Relational {
         .orderBy("l_orderkey", "l_linenumber")),
 
     // S5 (`DB.sql:117-121` FROM clauses): spark.sql over registered views —
-    // the SQL entry point must match the Dataset API (SURVEY §3.3).
+    // the SQL entry point must match the Dataset API (SURVEY §3.3). The
+    // views live on a clone, so the caller's catalog is left as it was.
     "s5_sql_scan" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      s.sql("""SELECT o_orderstatus, count(*) AS n
+      val c = Sessions.withConf(s)
+      Tables.registerAll(c, d)
+      c.sql("""SELECT o_orderstatus, count(*) AS n
                FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""")
     }),
 
@@ -321,10 +323,11 @@ object Relational {
         .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))),
 
     // §3.3: the spark.sql entry point with GROUPING SETS — SQL surface
-    // parity with the Dataset API.
+    // parity with the Dataset API (views on a clone, as in s5).
     "a14_grouping_sets" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      s.sql("""SELECT o_orderstatus, year(o_orderdate) AS order_year, count(*) AS n
+      val c = Sessions.withConf(s)
+      Tables.registerAll(c, d)
+      c.sql("""SELECT o_orderstatus, year(o_orderdate) AS order_year, count(*) AS n
                FROM orders
                GROUP BY GROUPING SETS ((o_orderstatus), (year(o_orderdate)))
                ORDER BY o_orderstatus ASC NULLS FIRST, order_year ASC NULLS FIRST""")
@@ -656,13 +659,15 @@ object Relational {
     // spec-pinned), not a plain LEFT ANTI — the plain form would keep
     // the NULL-key rows and silently diverge from ANSI. The probe key
     // is made nullable via NULLIF; the build side is a small distinct
-    // set that broadcasts.
+    // set that broadcasts. The views live on a clone: a caller's own
+    // `orders` view is left as it was.
     "p10_not_in_nullable" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      Tables.customer(s, d)
+      val c = Sessions.withConf(s)
+      Tables.orders(c, d).createOrReplaceTempView("orders")
+      Tables.customer(c, d)
         .withColumn("probe", expr("nullif(c_custkey % 100, 7)"))
         .createOrReplaceTempView("p10_probe")
-      s.sql("""SELECT c_custkey, probe FROM p10_probe
+      c.sql("""SELECT c_custkey, probe FROM p10_probe
                WHERE probe NOT IN (SELECT o_orderkey % 100 FROM orders
                                    WHERE o_orderkey % 100 < 20)
                ORDER BY c_custkey""")

@@ -26,55 +26,46 @@ object Warehouse {
     s"target/wh_${tag}_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
 
   /** Shared cascade leg of the X190 pair (gate form AND the bench's
-    * standing-parquet probe): registers the dim-key constraint and the
-    * summary, installs both optimizer rules session-wide (the
-    * GraftExtensions path), plans the BI star query, and REQUIRES the
-    * cascade fired — after join-elim + navigator, the only file
-    * relation allowed in the optimized plan is the standing summary
-    * itself (`summaryTag`; the gate's checkpointed summary is a
-    * LogicalRDD, so it allows none). Planning is forced while the
-    * rules are installed; the cached QueryExecution is what executes
-    * later. Rules and registries are uninstalled on exit so no other
-    * query sees them. */
+    * standing-parquet probe): plans the BI star query on a
+    * `Sessions.withRules` clone whose optimizer runs PK-FK join
+    * elimination (the part dim's key constraint) and then the aggregate
+    * navigator (the summary), and REQUIRES the cascade fired — after
+    * join-elim + navigator, the only file relation allowed in the
+    * optimized plan is the standing summary itself (`summaryTag`; the
+    * gate's checkpointed summary is a LogicalRDD, so it allows none).
+    * The returned DataFrame belongs to the clone, so it re-plans under
+    * the same rules wherever it runs, and no other query sees them. */
   def starBiCascade(s: SparkSession, d: String, li: DataFrame, mv: DataFrame,
                     summaryTag: Option[String]): DataFrame = {
     val p = Tables.part(s, d)
-    AggRewrite.register(AggRewrite.summaryFor(li, mv,
-      Seq("l_returnflag", "l_linestatus"), Seq("l_quantity")))
-    JoinElim.register(JoinElim.constraint(p, "p_partkey", referential = false))
-    val prev = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations =
-      prev ++ Seq(JoinElim.RegistryRule, AggRewrite.RegistryRule)
-    try {
-      val out = li.join(p, li("l_partkey") === p("p_partkey"), "left")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"),
-          count(lit(1)).as("n_items"))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          col("sq").cast("double").as("sum_qty"), col("n_items"))
-        .orderBy("l_returnflag", "l_linestatus")
-      val survivors = out.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              h.location.rootPaths.mkString(",")
-            case other => other.toString
-          }
-      }
-      val offending = summaryTag match {
-        case Some(tag) => survivors.filterNot(_.contains(tag))
-        case None => survivors
-      }
-      require(offending.isEmpty,
-        "optimizer cascade did not fire: base relation(s) survive the " +
-          s"rewrite: ${offending.mkString("; ")}")
-      out.queryExecution.executedPlan // pin physical planning under the rules
-      out
-    } finally {
-      s.experimental.extraOptimizations = prev
-      AggRewrite.clearRegistry()
-      JoinElim.clearRegistry()
+    val c = Sessions.withRules(s,
+      JoinElim.rule(Seq(JoinElim.constraint(p, "p_partkey", referential = false))),
+      AggRewrite.rule(Seq(AggRewrite.summaryFor(li, mv,
+        Seq("l_returnflag", "l_linestatus"), Seq("l_quantity")))))
+    val star = li.join(p, li("l_partkey") === p("p_partkey"), "left")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"),
+        count(lit(1)).as("n_items"))
+      .select(col("l_returnflag"), col("l_linestatus"),
+        col("sq").cast("double").as("sum_qty"), col("n_items"))
+      .orderBy("l_returnflag", "l_linestatus")
+    val out = org.apache.spark.sql.graft.PlanUtil.ofRows(c, star.queryExecution.logical)
+    val survivors = out.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.rootPaths.mkString(",")
+          case other => other.toString
+        }
     }
+    val offending = summaryTag match {
+      case Some(tag) => survivors.filterNot(_.contains(tag))
+      case None => survivors
+    }
+    require(offending.isEmpty,
+      "optimizer cascade did not fire: base relation(s) survive the " +
+        s"rewrite: ${offending.mkString("; ")}")
+    out
   }
 
   /** X200 core: per-status price stats computed THROUGH mergeable
@@ -798,15 +789,15 @@ object Warehouse {
     }),
 
     // X190: the SAME BI text under the full optimizer-rule cascade
-    // (the GraftExtensions / extraOptimizations path RewriteCascadeSpec
-    // pins): PK-FK join elimination drops the never-read dim join,
-    // exposing an Aggregate-over-base that the aggregate navigator
-    // then routes onto the standing summary — within one fixed-point
-    // optimizer batch, no per-plan calls. The require() keeps the
-    // gate honest (x133 discipline): if either rule stops firing, a
-    // base relation survives in the optimized plan and the query
-    // FAILS instead of silently computing the same answer the
-    // expensive way. The oracle is the direct star SQL, so hash
+    // (both rules on a Sessions.withRules clone, the path
+    // RewriteCascadeSpec pins): PK-FK join elimination drops the
+    // never-read dim join, exposing an Aggregate-over-base that the
+    // aggregate navigator then routes onto the standing summary —
+    // within one fixed-point optimizer batch, no per-plan calls. The
+    // require() keeps the gate honest (x133 discipline): if either
+    // rule stops firing, a base relation survives in the optimized
+    // plan and the query FAILS instead of silently computing the same
+    // answer the expensive way. The oracle is the direct star SQL, so hash
     // equality proves cascade ≡ direct. At 100 TB the rewritten plan
     // reads a |returnflag × linestatus|-row summary instead of the
     // fact table AND skips the dim build/probe per executor — the
@@ -1316,15 +1307,15 @@ object Warehouse {
       // input-sized partitions for the per-batch fold (StreamTuning —
       // the foreachBatch group-fold pays the same per-partition fixed
       // cost per micro-batch as the stateful gates)
-      graft.streaming.StreamTuning.withInputSizedShufflePartitions(s, Seq(inDir)) {
-        val q = s.readStream.schema(v0.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir + "/*")
-          .writeStream
-          .option("checkpointLocation", scratch.toString + "/ckpt")
-          .foreachBatch(RetractableView.sink(store, "o_orderstatus") _)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      Sessions.withConf(s, "spark.sql.shuffle.partitions" ->
+          graft.streaming.StreamTuning.inputSizedShufflePartitions(s, Seq(inDir)).toString)
+        .readStream.schema(v0.schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir + "/*")
+        .writeStream
+        .option("checkpointLocation", scratch.toString + "/ckpt")
+        .foreachBatch(RetractableView.sink(store, "o_orderstatus") _)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       val applied = RetractableView.lastApplied(s, store)
       require(applied == 1L, s"expected two micro-batches applied, marker=$applied")
       // crash-replay: redeliver an already-applied id — must no-op (a

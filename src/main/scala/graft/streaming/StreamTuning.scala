@@ -17,15 +17,16 @@ import org.apache.spark.sql.SparkSession
   * ZERO-row finalize micro-batch cost ~2 s at 32 partitions — pure
   * per-partition machinery.
   *
-  * [[withInputSizedShufflePartitions]] resolves the partition count
+  * [[inputSizedShufflePartitions]] resolves the partition count
   * from the staged input volume at the standard ~64 MB advisory
   * (AQE's own default advisory size), clamped to [1, session value] —
   * so at production volumes (GBs+ per trigger) it resolves to the
   * session's full width and behaves exactly as before, while
   * gate/replay-sized inputs stop paying for near-empty state stores.
-  * The session value is restored afterwards; the bench and verify
-  * harnesses run queries sequentially, so the temporary override
-  * cannot leak into another query's plan.
+  * It only computes the count: a stream gate starts its query on
+  * `Sessions.withConf(s, "spark.sql.shuffle.partitions" -> n)`, so the
+  * session it was handed, which other queries may be planning on at
+  * the same time, keeps its own value.
   */
 object StreamTuning {
 
@@ -47,25 +48,18 @@ object StreamTuning {
       if (fs.exists(p)) Some(fs.getContentSummary(p).getLength) else None
     } catch { case _: Exception => None }
 
-  /** Run `body` (stream start + awaitTermination) with
-    * `spark.sql.shuffle.partitions` sized from the total bytes staged
-    * under `inputDirs`; restore the session value afterwards. Defensive
-    * on both inputs: a non-numeric session value (e.g. "auto" under a
-    * vendor runtime) caps at `defaultParallelism` instead of throwing,
-    * and any directory whose size cannot be resolved keeps the session
-    * width (identity) rather than collapsing the stream to 1 partition. */
-  def withInputSizedShufflePartitions[T](s: SparkSession,
-                                         inputDirs: Seq[String])(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val before = s.conf.get(key)
-    val cap = scala.util.Try(before.toLong)
+  /** `spark.sql.shuffle.partitions` for a stream over the bytes staged
+    * under `inputDirs`, capped at `s`'s own value. Defensive on both
+    * inputs: a non-numeric session value (e.g. "auto" under a vendor
+    * runtime) caps at `defaultParallelism` instead of throwing, and any
+    * directory whose size cannot be resolved keeps the session width
+    * rather than collapsing the stream to 1 partition. */
+  def inputSizedShufflePartitions(s: SparkSession, inputDirs: Seq[String]): Int = {
+    val cap = scala.util.Try(s.conf.get("spark.sql.shuffle.partitions").toLong)
       .getOrElse(s.sparkContext.defaultParallelism.toLong)
     val sizes = inputDirs.map(dirBytes(s, _))
-    val target =
-      if (sizes.exists(_.isEmpty)) cap // unknown volume: never downsize
-      else math.max(1L,
-        math.min(cap, sizes.flatten.sum / AdvisoryBytesPerPartition + 1))
-    s.conf.set(key, target.toString)
-    try body finally s.conf.set(key, before)
+    if (sizes.exists(_.isEmpty)) cap.toInt // unknown volume: never downsize
+    else math.max(1L,
+      math.min(cap, sizes.flatten.sum / AdvisoryBytesPerPartition + 1)).toInt
   }
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *   3. a raw double SUM is NOT eligible (re-aggregating double
   *      partials is order-dependent — the Det.dsum rationale);
   *   4. a predicate on a non-grouping column blocks the rewrite;
-  *   5. the session-registry rule (the injectOptimizerRule path) fires
-  *      the same transform.
+  *   5. the rule value, alone and inside a `Sessions.withRules`
+  *      clone's optimizer, fires the same transform.
   */
 class AggRewriteSpec extends SparkSpecBase {
 
@@ -100,17 +100,20 @@ class AggRewriteSpec extends SparkSpecBase {
       }.nonEmpty, "a computed Project must block the rewrite")
   }
 
-  test("session-registry rule applies the same transform") {
+  test("rule value applies the same transform, alone and on a withRules clone") {
     val (li, summary) = setup()
-    AggRewrite.clearRegistry()
-    AggRewrite.register(summary)
-    try {
-      val direct = li.groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).as("sp"))
-      val routed = AggRewrite.RegistryRule(direct.queryExecution.analyzed)
-      assert(routed.collect {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-        }.isEmpty, "registry rule did not route")
-    } finally AggRewrite.clearRegistry()
+    val direct = li.groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).as("sp"))
+    def relations(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = p.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+    }
+    val routed = AggRewrite.rule(Seq(summary))(direct.queryExecution.analyzed)
+    assert(relations(routed).isEmpty, "rule value did not route")
+    val c = graft.Sessions.withRules(spark, AggRewrite.rule(Seq(summary)))
+    val onClone = org.apache.spark.sql.graft.PlanUtil.ofRows(c, direct.queryExecution.logical)
+    assert(relations(onClone.queryExecution.optimizedPlan).isEmpty,
+      "the clone's optimizer did not route")
+    assert(relations(direct.queryExecution.optimizedPlan).nonEmpty,
+      "the caller's own optimizer must not see the clone's rule")
   }
 }

@@ -1,13 +1,14 @@
 package graft.plans
 
-import graft.SparkSpecBase
-import graft.Tables
+import graft.{Sessions, SparkSpecBase, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.PlanUtil
 import org.apache.spark.sql.catalyst.plans.logical.Deduplicate
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-/** Integration pin for the three warehouse rewrites running INSIDE the
-  * optimizer (the GraftExtensions / extraOptimizations path), not just
+/** Integration pin for the warehouse rewrites running INSIDE the
+  * optimizer (rule values on a `Sessions.withRules` clone), not just
   * as per-plan calls — including the cascade the per-plan API can't
   * express: PK-FK join elimination exposes an Aggregate-over-base
   * shape that the aggregate navigator then routes onto the summary,
@@ -25,63 +26,54 @@ class RewriteCascadeSpec extends SparkSpecBase {
     val groupCols = Seq("l_returnflag", "l_linestatus")
     val mv = AggRewrite.summarize(li, groupCols, Seq("l_quantity"))
       .localCheckpoint(eager = true)
-    AggRewrite.clearRegistry(); JoinElim.clearRegistry(); DistinctElim.clearRegistry()
-    AggRewrite.register(AggRewrite.summaryFor(li, mv, groupCols, Seq("l_quantity")))
     // LEFT join: eliminable on uniqueness alone, and it inserts no
     // residual filter, so the navigator sees a clean Aggregate-over-base
-    JoinElim.register(JoinElim.constraint(p, "p_partkey", referential = false))
-    DistinctElim.register(DistinctElim.unique(o, "o_orderkey"))
+    val c = Sessions.withRules(spark,
+      JoinElim.rule(Seq(JoinElim.constraint(p, "p_partkey", referential = false))),
+      AggRewrite.rule(Seq(AggRewrite.summaryFor(li, mv, groupCols, Seq("l_quantity")))))
+    def onClone(df: DataFrame): DataFrame = PlanUtil.ofRows(c, df.queryExecution.logical)
 
-    val prevExtra = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prevExtra ++ Seq(JoinElim.RegistryRule, AggRewrite.RegistryRule,
-        DistinctElim.RegistryRule)
-    try {
-      val star = li.join(p, li("l_partkey") === p("p_partkey"), "left")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"))
-      // assert on the OPTIMIZED LOGICAL plan: under AQE the executed
-      // plan is a leaf AdaptiveSparkPlanExec whose collect sees no
-      // inner scans, which made the pre-r11 executedPlan assertion
-      // vacuous — and indeed the cascade was NOT firing (the optimizer
-      // wraps the dim in an inferred isnotnull(pk) filter that
-      // dimMatches had to learn to peel)
-      val rels = star.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
-      }
-      assert(rels.isEmpty,
-        s"cascade must leave only the checkpointed summary; base relations survive: $rels")
-      // physical layer on sparkPlan, NOT executedPlan: AQE's
-      // AdaptiveSparkPlanExec is a leaf to collect(), which made the
-      // pre-r11 form of this assertion pass even while the cascade
-      // never fired (the r11 verdict's #1 lesson)
-      val scans = star.queryExecution.sparkPlan.collect {
-        case f: FileSourceScanExec => f
-      }
-      assert(scans.isEmpty,
-        s"cascade must leave only the checkpointed summary; still scans: ${scans.size}")
-      // values survive the double rewrite
-      val direct = li.groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"))
-      assert(star.orderBy("l_returnflag", "l_linestatus").collect().map(_.toString).toSeq ==
-        direct.orderBy("l_returnflag", "l_linestatus").collect().map(_.toString).toSeq)
-
-      val defensive = o.select("o_orderkey", "o_orderpriority").distinct()
-        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-      val dedups = defensive.queryExecution.optimizedPlan.collect {
-        case d: Deduplicate => d
-      }
-      // Deduplicate is rewritten to an Aggregate by the core optimizer
-      // BEFORE user rules run; the injected rule still must not break
-      // anything, and the per-plan path (x146's gate) covers the drop.
-      // Here we pin that the session-wide install is at least inert on
-      // this shape and exact on values.
-      assert(defensive.orderBy("o_orderpriority").collect().map(_.getLong(1)).sum ==
-        o.count(), dedups.toString)
-    } finally {
-      spark.experimental.extraOptimizations = prevExtra
-      AggRewrite.clearRegistry(); JoinElim.clearRegistry(); DistinctElim.clearRegistry()
+    val star = onClone(li.join(p, li("l_partkey") === p("p_partkey"), "left")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq")))
+    // assert on the OPTIMIZED LOGICAL plan: under AQE the executed
+    // plan is a leaf AdaptiveSparkPlanExec whose collect sees no
+    // inner scans, which made the pre-r11 executedPlan assertion
+    // vacuous — and indeed the cascade was NOT firing (the optimizer
+    // wraps the dim in an inferred isnotnull(pk) filter that
+    // dimMatches had to learn to peel)
+    val rels = star.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
     }
+    assert(rels.isEmpty,
+      s"cascade must leave only the checkpointed summary; base relations survive: $rels")
+    // physical layer on sparkPlan, NOT executedPlan: AQE's
+    // AdaptiveSparkPlanExec is a leaf to collect(), which made the
+    // pre-r11 form of this assertion pass even while the cascade
+    // never fired (the r11 verdict's #1 lesson)
+    val scans = star.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f
+    }
+    assert(scans.isEmpty,
+      s"cascade must leave only the checkpointed summary; still scans: ${scans.size}")
+    // values survive the double rewrite
+    val direct = li.groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"))
+    assert(star.orderBy("l_returnflag", "l_linestatus").collect().map(_.toString).toSeq ==
+      direct.orderBy("l_returnflag", "l_linestatus").collect().map(_.toString).toSeq)
+
+    val defensive = onClone(o.select("o_orderkey", "o_orderpriority").distinct()
+      .groupBy("o_orderpriority").agg(count(lit(1)).as("n")))
+    val dedups = defensive.queryExecution.optimizedPlan.collect {
+      case d: Deduplicate => d
+    }
+    // Deduplicate is rewritten to an Aggregate by the core optimizer
+    // BEFORE user rules run, so distinct elimination has no optimizer
+    // rule form; the per-plan path (x146's gate) covers the drop. Here
+    // we pin that the installed rules are inert on this shape and
+    // exact on values.
+    assert(defensive.orderBy("o_orderpriority").collect().map(_.getLong(1)).sum ==
+      o.count(), dedups.toString)
   }
 
   test("negative control: with the rules uninstalled, the same pins FAIL on the same layers") {
@@ -93,7 +85,6 @@ class RewriteCascadeSpec extends SparkSpecBase {
     // missing)
     val li = Tables.lineitem(spark, sfDir)
     val p = Tables.part(spark, sfDir)
-    AggRewrite.clearRegistry(); JoinElim.clearRegistry(); DistinctElim.clearRegistry()
     val star = li.join(p, li("l_partkey") === p("p_partkey"), "left")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sq"))

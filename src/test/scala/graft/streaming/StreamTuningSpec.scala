@@ -38,29 +38,34 @@ class StreamTuningSpec extends SparkSpecBase {
     }
   }
 
+  private def width: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
   test("unknown input volume keeps the session width (never downsizes to 1)") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    StreamTuning.withInputSizedShufflePartitions(spark,
-      Seq("/definitely/not/a/real/path")) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
-        "an unresolvable input dir must not shrink the stream's partitioning")
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+    assert(StreamTuning.inputSizedShufflePartitions(spark,
+        Seq("/definitely/not/a/real/path")) === width,
+      "an unresolvable input dir must not shrink the stream's partitioning")
   }
 
-  test("staged gate-sized input still sizes down, and the session value is restored") {
+  test("staged gate-sized input sizes down to 1") {
     withTempDir { d =>
       java.nio.file.Files.writeString(new java.io.File(d, "tiny.bin").toPath, "z" * 100)
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
-      StreamTuning.withInputSizedShufflePartitions(spark, Seq(d.getAbsolutePath)) {
-        assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
-      }
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+      assert(width > 1)
+      assert(StreamTuning.inputSizedShufflePartitions(spark, Seq(d.getAbsolutePath)) === 1)
+    }
+  }
+
+  test("sizing never changes spark.conf") {
+    withTempDir { d =>
+      java.nio.file.Files.writeString(new java.io.File(d, "tiny.bin").toPath, "z" * 100)
+      val before = spark.conf.getAll
+      StreamTuning.inputSizedShufflePartitions(spark, Seq(d.getAbsolutePath))
+      StreamTuning.inputSizedShufflePartitions(spark, Seq("/definitely/not/a/real/path"))
+      assert(spark.conf.getAll === before)
     }
   }
 
   // (the non-numeric session-value fallback in
-  // withInputSizedShufflePartitions is defensive-only: Spark 4's
+  // inputSizedShufflePartitions is defensive-only: Spark 4's
   // RuntimeConfig validates the key as int, so the scenario cannot be
   // constructed in-process here — vendor runtimes with laxer validation
   // are the audience)
