@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /** The one local session policy for every `main` and spec base:
   * `local[n]` with `n = SPARK_GRAFT_CPUS` (default 4) and as many shuffle
   * partitions, UTC, a generated-class cache sized for the full surface,
-  * sort-reporting bucketed scans, no UI, WARN logging.
+  * sort-reporting bucketed scans, parquet TIMESTAMP(NANOS) read as
+  * long, no UI, WARN logging.
   * (`app.CdcRunner` builds its own session: spark-submit supplies its
   * master.)
   *
@@ -44,6 +45,10 @@ object Sessions {
       // a fresh clone re-compiled all 8 of its codegen classes. No
       // session here adds jars or other artifacts, so all share one.
       "spark.sql.artifact.isolation.enabled" -> "false",
+      // a source written with parquet TIMESTAMP(NANOS) reads as a long,
+      // which Tables.events truncates to micros; without it the read
+      // fails. It changes nothing for any other timestamp.
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false")
     val b = SparkSession.builder().master(s"local[$cpus]")
     // the builder's own options override SparkConf's, so a JVM option

@@ -62,10 +62,6 @@ class SessionsSpec extends SparkSpecBase with Checkpoints {
 
   test("concurrent stream gates, x166 cascades and SQL-view gates leave the caller's session as it was") {
     val s = spark.newSession()
-    // Tables.events sets this flag on the session it reads through (the
-    // one write the lint below still allows); set it up front so the
-    // comparison sees every other write
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val confBefore = s.conf.getAll
     val tablesBefore = s.catalog.listTables().collect().map(_.name).toSet
     val names = Seq("x190_stream_tumbling", "x181_retract_sink", "x166_star_bi_cascade",
@@ -135,13 +131,11 @@ class SessionsSpec extends SparkSpecBase with Checkpoints {
     assert(src.count(f => code(f).exists(_.contains("object PlanDump"))) === 1)
   }
 
-  test("src/main writes session conf and optimizer rules in Sessions alone (Tables.events aside)") {
+  test("src/main writes session conf and optimizer rules in Sessions alone") {
     val assignsRules = """experimental\.\w+\s*(\+\+)?=(?!=)""".r
     val writes = sources.filter(_.getName != "Sessions.scala").flatMap { f =>
       code(f).filter(l => l.contains("conf.set(") || l.contains("conf.unset(") ||
           assignsRules.findFirstIn(l).isDefined)
-        // the listed exception: the nanos flag on every events read
-        .filterNot(l => f.getName == "Tables.scala" && l.contains("nanosAsLong"))
         .map(l => s"${f.getName}: ${l.trim}")
     }
     assert(writes.isEmpty, writes.mkString("\n"))
